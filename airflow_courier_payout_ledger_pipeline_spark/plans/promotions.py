@@ -13,8 +13,9 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from airflow_courier_payout_ledger_pipeline_spark import schemas as S
 from airflow_courier_payout_ledger_pipeline_spark.operators.merge import (
@@ -40,7 +41,7 @@ DDS_WM_DEFAULT = datetime(2022, 1, 1)  # sql/deliveries_stg_to_dds.sql:16
 
 
 def _stg_store(lake: Lakehouse) -> WatermarkStore:
-    # storage provides its cursor store (parquet store here; the JDBC warehouse
+    # storage provides its cursor store (a JSON document here; the JDBC warehouse
     # returns its SQL-guarded JdbcWatermarkStore) — jobs stay backend-agnostic
     return lake.wm_store("stg")
 
@@ -104,8 +105,13 @@ def load_deliveries_job(
     incremental extraction, SCD0 insert-ignore into bronze, cursor upsert.
 
     Window = [coalesce(stored_ts, ds − 7 days), ds 00:00:00) — the 7-day cold-start
-    default of :34. Guard and cursor mirror :66-79: cursor = max(delivery_ts) over
-    the WHOLE bronze table, written only when the table is non-empty."""
+    default of :34. The reference's cursor (:66-79) is max(delivery_ts) over the
+    whole bronze table, written only when the table is non-empty. Bronze is
+    append-only, so that equals max(window start, max delivery_ts of the rows
+    SCD0 appended this run), which costs O(increment): the max is observed on
+    the append's own write, with no second scan. It is NOT the max over the
+    fetched records: a resubmitted delivery_id can carry a later delivery_ts
+    than the row bronze keeps. Nothing appended → cursor unchanged."""
     ds_dt = datetime.strptime(ds, "%Y-%m-%d")
     store = _stg_store(lake)
     from_ts = store.read_last_loaded_ts(spark, STG_WM_KEY, ds_dt - timedelta(days=7))
@@ -120,12 +126,16 @@ def load_deliveries_job(
             spark, "stg", "deliverysystem_deliveries", S.STG_DELIVERIES_SCHEMA
         )
         new_rows = scd0_new_rows(fresh, existing, ["delivery_key"], tiebreaker=F.col("delivery_ts"))
-        lake.append(new_rows, "stg", "deliverysystem_deliveries")
-
-    stg = lake.read(spark, "stg", "deliverysystem_deliveries", S.STG_DELIVERIES_SCHEMA)
-    row = stg.agg(F.count("*").alias("n"), F.max("delivery_ts").alias("mx")).first()
-    if row.n > 0:  # non-empty guard, modules/load_deliveries.py:70
-        store.write_last_loaded_ts(spark, STG_WM_KEY, row.mx)
+        # epoch micros, converted like collect() converts a timestamp
+        appended = Observation()
+        lake.append(
+            new_rows.observe(appended, F.max(F.unix_micros("delivery_ts")).alias("mx")),
+            "stg",
+            "deliverysystem_deliveries",
+        )
+        mx = TimestampType().fromInternal(appended.get["mx"])
+        if mx is not None:  # non-empty guard, modules/load_deliveries.py:70
+            store.write_last_loaded_ts(spark, STG_WM_KEY, max(from_ts, mx))
     return len(records)
 
 
@@ -134,7 +144,9 @@ def load_deliveries_job(
 
 def _new_stg_deliveries(spark: SparkSession, lake: Lakehouse) -> DataFrame:
     """The shared increment CTE (sql/deliveries_stg_to_dds.sql:2-17): bronze rows
-    strictly after the DDS watermark, JSON-extracted into typed columns (P1/P2).
+    strictly after the DDS watermark, JSON-extracted into typed columns (P1/P2),
+    at delivery grain with the order fields (``order_key``/``order_ts``) the
+    order and calendar dims need — the one increment parse of every DDS job.
     The cursor binds driver-side → parquet predicate pushdown on delivery_ts."""
     wm = _dds_store(lake).read_last_loaded_ts(spark, DDS_WM_KEY, DDS_WM_DEFAULT)
     stg = lake.read(spark, "stg", "deliverysystem_deliveries", S.STG_DELIVERIES_SCHEMA)
@@ -142,6 +154,7 @@ def _new_stg_deliveries(spark: SparkSession, lake: Lakehouse) -> DataFrame:
     return stg.filter(F.col("delivery_ts") > F.lit(wm)).select(
         F.get_json_object(j, "$.delivery_id").alias("delivery_key"),
         F.get_json_object(j, "$.order_id").alias("order_key"),
+        F.get_json_object(j, "$.order_ts").cast("timestamp").alias("order_ts"),
         F.col("delivery_ts").alias("ts"),
         F.get_json_object(j, "$.sum").cast("decimal(14,2)").alias("order_sum"),
         F.get_json_object(j, "$.courier_id").alias("courier_key"),
@@ -163,20 +176,6 @@ def couriers_stg_to_dds_job(spark: SparkSession, lake: Lakehouse) -> None:
     )
     lake.upsert_scd1(
         spark, named, "dds", "dm_couriers", S.DM_COURIERS_SCHEMA, ["courier_key"]
-    )
-
-
-def _new_stg_orders(spark: SparkSession, lake: Lakehouse) -> DataFrame:
-    """The order-grain view of the SAME watermark window as
-    ``_new_stg_deliveries``: (order_key, order_ts) extracted from the fresh
-    bronze increment. Shared by the calendar-dim feeder (order timestamps)
-    and the dm_orders feeder so both see one consistent window."""
-    wm = _dds_store(lake).read_last_loaded_ts(spark, DDS_WM_KEY, DDS_WM_DEFAULT)
-    stg = lake.read(spark, "stg", "deliverysystem_deliveries", S.STG_DELIVERIES_SCHEMA)
-    j = "json_response"
-    return stg.filter(F.col("delivery_ts") > F.lit(wm)).select(
-        F.get_json_object(j, "$.order_id").alias("order_key"),
-        F.get_json_object(j, "$.order_ts").cast("timestamp").alias("order_ts"),
     )
 
 
@@ -212,13 +211,10 @@ def timestamps_stg_to_dds_job(spark: SparkSession, lake: Lakehouse) -> None:
     dim's uniqueness (r15 verdict item 1). Single-writer-per-table is the
     discipline that makes the DAG's parallel dims group actually safe;
     pinned by tests/test_pipeline.py::test_dim_feeders_are_single_writer_per_table."""
-    d_ts = _new_stg_deliveries(spark, lake).select("ts")
-    o_ts = (
-        _new_stg_orders(spark, lake)
-        .select(F.col("order_ts").alias("ts"))
-        .where(F.col("ts").isNotNull())
+    both_ts = F.explode(F.array("ts", "order_ts")).alias("ts")  # one scan, both kinds
+    new_ts = _calendar_rows(
+        _new_stg_deliveries(spark, lake).select(both_ts).where(F.col("ts").isNotNull())
     )
-    new_ts = _calendar_rows(d_ts.unionByName(o_ts))
     existing = lake.read(spark, "dds", "dm_timestamps", S.DM_TIMESTAMPS_SCHEMA)
     lake.append(scd0_new_rows(new_ts, existing, ["ts"]), "dds", "dm_timestamps")
 
@@ -236,7 +232,7 @@ def orders_stg_to_dds_job(spark: SparkSession, lake: Lakehouse) -> None:
     surrogate of order_ts, so this job needs no read of dm_timestamps and the
     DAG's dims group parallelizes without a double-insert hazard."""
     new_orders = (
-        _new_stg_orders(spark, lake)
+        _new_stg_deliveries(spark, lake)
         .where(F.col("order_ts").isNotNull())
         .dropDuplicates(["order_key"])
         .select(

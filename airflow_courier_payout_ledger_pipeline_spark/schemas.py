@@ -74,14 +74,6 @@ STG_DELIVERIES_SCHEMA = StructType(
     ]
 )
 
-# Watermark KV store — modules/load_deliveries.py:30-36
-WF_SETTINGS_SCHEMA = StructType(
-    [
-        StructField("workflow_key", StringType(), False),
-        StructField("workflow_settings", StringType(), False),  # JSON text
-    ]
-)
-
 # --- DDS (silver): snowflake dims + fact --------------------------------------------
 
 DM_COURIERS_SCHEMA = StructType(

@@ -355,13 +355,13 @@ def sweep_stale_staging(
 class JdbcWatermarkStore:
     """The reference's ``srv_wf_settings`` cursor table on its ACTUAL medium —
     a JDBC warehouse (modules/load_deliveries.py:28-38: key→jsonb document in
-    Postgres) — with the same API as the parquet ``operators.watermark.
+    Postgres) — with the same API as the JSON-file ``operators.watermark.
     WatermarkStore`` so pipelines swap stores without touching plan code.
 
     Scale/correctness notes:
     - state is one row per workflow key — driver-side control-plane work;
       reads bind the cursor as a literal so the watermark predicate stays
-      constant-foldable into the fact scan, exactly like the parquet store;
+      constant-foldable into the fact scan, exactly like the file store;
     - the advance is GUARDED IN SQL (``... AND cursor_ts < ?``): a replayed
       run carrying an older cursor (the at-least-once case) is a no-op at the
       database, not just by driver-side convention;

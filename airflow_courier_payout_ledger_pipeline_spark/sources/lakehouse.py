@@ -10,6 +10,7 @@ same operators map to ``MERGE INTO`` — the plan layer is storage-agnostic.
 
 from __future__ import annotations
 
+import os
 import re
 import shutil
 import urllib.parse
@@ -20,6 +21,21 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+def atomic_write_text(path: Path, text: str) -> None:
+    """Replace ``path`` with ``text`` so readers see the old content or the
+    new, never a torn or missing file: write a temp file in the same
+    directory, fsync it, then ``os.replace`` it over ``path`` (atomic on
+    POSIX). A crash before the replace leaves the old file and a stray
+    ``<name>.__tmp_*`` that no reader opens. The one commit point of every
+    small pointer or state document in the lakehouse."""
+    tmp = path.with_name(f"{path.name}.__tmp_{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -43,12 +59,13 @@ class Lakehouse:
     def wm_store(self, layer: str, table: str = "srv_wf_settings"):
         """The layer's watermark cursor store. Storage backends each provide
         their own (`JdbcWarehouse.wm_store` returns the SQL-guarded JDBC one),
-        which is what lets the promotion jobs run unchanged on either."""
+        which is what lets the promotion jobs run unchanged on either. Here it
+        is one JSON document, ``<layer>/<table>.json``."""
         from airflow_courier_payout_ledger_pipeline_spark.operators.watermark import (
             WatermarkStore,
         )
 
-        return WatermarkStore(self.path(layer, table))
+        return WatermarkStore(str(self.root / layer / f"{table}.json"))
 
     def read(
         self, spark: SparkSession, layer: str, table: str, schema: StructType
@@ -164,9 +181,7 @@ class Lakehouse:
         nxt = self._next_version(layer, table)
         root = self.root / layer / table
         df.write.mode("overwrite").parquet(str(root / f"v={nxt}"))
-        tmp = root / f"_LATEST.__tmp_{uuid.uuid4().hex[:8]}"
-        tmp.write_text(str(nxt))
-        tmp.rename(self._pointer(layer, table))
+        atomic_write_text(self._pointer(layer, table), str(nxt))
         return nxt
 
     # --- multi-table commit manifest (M3 atomicity, SURVEY §2.6) ----------------------
@@ -275,7 +290,6 @@ class Lakehouse:
         off-chain files only, behind an age threshold — a file created
         milliseconds ago is never unlinked."""
         import json
-        import os
 
         base_mid = self.current_manifest_id()  # this transaction's merge base
         if base_mid is None:
@@ -312,9 +326,7 @@ class Lakehouse:
                 "silently drop its tables (single-writer contract violated); "
                 "re-stage against the new current manifest and re-commit"
             )
-        tmp = mdir / f"_LATEST.__tmp_{uuid.uuid4().hex[:8]}"
-        tmp.write_text(str(mid))
-        tmp.rename(self._manifest_pointer())
+        atomic_write_text(self._manifest_pointer(), str(mid))
         return mid
 
     def commit_multi(self, writes: Sequence[tuple[DataFrame, str, str]]) -> int:

@@ -217,7 +217,7 @@ def test_jdbc_watermark_interchangeable_with_parquet_store(spark, url, tmp_path)
     for ts in seq:
         jw.write_last_loaded_ts(spark, "wf", ts)
         pw.write_last_loaded_ts(spark, "wf", ts)
-    # NOTE: the parquet store trusts caller ordering (write-after-data), the
+    # NOTE: the JSON-file store trusts caller ordering (write-after-data), the
     # JDBC store additionally guards in SQL; on a monotone caller both agree.
     assert jw.read_last_loaded_ts(spark, "wf", d0) == datetime(2022, 4, 1)
 

@@ -5,12 +5,17 @@ golden ledger output; plus re-run idempotency."""
 
 from __future__ import annotations
 
+import os
+from datetime import datetime
 from decimal import Decimal as D
+from pathlib import Path
+from unittest import mock
 
 import pytest
 
 from airflow_courier_payout_ledger_pipeline_spark import schemas as S
 from airflow_courier_payout_ledger_pipeline_spark.plans import promotions as P
+from airflow_courier_payout_ledger_pipeline_spark.sources import lakehouse as L
 from airflow_courier_payout_ledger_pipeline_spark.sources.lakehouse import Lakehouse
 
 
@@ -124,6 +129,64 @@ def test_two_day_pipeline(spark, lake):
     }
     assert set(facts) == {"d1", "d2", "d3", "d4"}
     assert facts["d1"].order_sum == D("1000.00")
+
+    # both cursors stop at d4, the newest row bronze keeps — not at the
+    # ignored d1 resubmit's later 10:00 delivery_ts
+    d4_ts = datetime(2023, 5, 11, 9, 0, 0)
+    assert lake.wm_store("stg").read_last_loaded_ts(spark, P.STG_WM_KEY, None) == d4_ts
+    assert lake.wm_store("dds").read_last_loaded_ts(spark, P.DDS_WM_KEY, None) == d4_ts
+
+
+def _facts(spark, lake):
+    return sorted(
+        lake.read(spark, "dds", "fct_deliveries", S.FCT_DELIVERIES_SCHEMA).collect()
+    )
+
+
+def test_dds_cursor_crash_window_rerun_matches_uninterrupted_run(spark, tmp_path):
+    """The DDS cursor write is the last step of deliveries_stg_to_dds_job. A
+    crash inside its atomic replace (facts already appended) leaves the
+    previous cursor readable and a stray temp file that readers ignore;
+    rerunning the day gives the same facts and mart as an uninterrupted run
+    on a fresh lake."""
+    prev = datetime(2023, 5, 1)
+
+    def fresh_lake(name):
+        lk = Lakehouse(str(tmp_path / name))
+        lk.wm_store("dds").write_last_loaded_ts(spark, P.DDS_WM_KEY, prev)
+        return lk
+
+    def day(lk):
+        P.run_daily(
+            spark, lk, fake_api(DAY1_COURIERS), fake_api(DAY1_DELIVERIES, "delivery_ts"),
+            "2023-05-11",
+        )
+
+    crashed = fresh_lake("crashed")
+    doc = crashed.wm_store("dds").path
+    real_replace = os.replace
+
+    def replace(src, dst):
+        if Path(dst) == doc:
+            raise RuntimeError("kill")
+        return real_replace(src, dst)
+
+    with pytest.raises(RuntimeError, match="kill"), mock.patch.object(
+        L.os, "replace", side_effect=replace
+    ):
+        day(crashed)
+    assert len(_facts(spark, crashed)) == 3  # the crash came after the facts
+    assert crashed.wm_store("dds").read_last_loaded_ts(spark, P.DDS_WM_KEY, None) == prev
+    assert len(list(doc.parent.glob(f"{doc.name}.__tmp_*"))) == 1
+
+    day(crashed)
+    clean = fresh_lake("clean")
+    day(clean)
+    assert _facts(spark, crashed) == _facts(spark, clean)
+    assert _ledger(spark, crashed) == _ledger(spark, clean)
+    assert crashed.wm_store("dds").read_last_loaded_ts(spark, P.DDS_WM_KEY, None) == (
+        clean.wm_store("dds").read_last_loaded_ts(spark, P.DDS_WM_KEY, None)
+    )
 
 
 def test_rerun_is_idempotent(spark, lake):

@@ -232,6 +232,19 @@ _FILE_EVIDENCE: dict[str, set[str]] = {
         "scd1_upsert",
         "scd0_insert_ignore",
     },
+    # the watermark cursor became an atomically replaced JSON document (the
+    # JDBC store's docstring now names it); no registry query runs a cursor
+    # store — the promotion rail's queries adjudicate the watermark-windowed
+    # increment it feeds, and tests/test_watermark.py + test_pipeline.py's
+    # crash-window test pin the store itself
+    "airflow_courier_payout_ledger_pipeline_spark/operators/watermark.py": {
+        "incremental_promotion",
+        "scd0_insert_ignore",
+    },
+    "airflow_courier_payout_ledger_pipeline_spark/sources/jdbc.py": {
+        "incremental_promotion",
+        "scd0_insert_ignore",
+    },
     # round-13: FCT_DELIVERIES_QUARANTINE_SCHEMA added (declaration only;
     # consumed by the promotion rail above)
     "airflow_courier_payout_ledger_pipeline_spark/schemas.py": {
