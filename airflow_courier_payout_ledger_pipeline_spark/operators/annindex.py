@@ -19,8 +19,11 @@ crash-window guarantee the facts+watermark pair gets (tests/test_file_sources.py
 
 ``search_residual_ivfpq_index`` then answers queries from the PERSISTED codes:
 centroids + codebooks collect as bounded driver artifacts (O(k·dim) — the
-same budget discipline as every quantizer here), the codes table streams
-through the identical centroid-equi-join + ADC + per-query top-k topology as
+same budget discipline as every quantizer here), and the query side is
+computed on the driver from them: the query rows are read when the search is
+constructed, and their probes and ADC tables enter the plan as a local
+relation. Only the codes of the probed cells stream through the
+identical centroid-equi-join + ADC + per-query top-k topology as
 ``similarity.ivf_pq_residual_topk``, and results are byte-equal to searching
 the raw corpus on the fly (pinned in tests/test_annindex.py). At 100 TB the
 difference is the whole point: encode once (one corpus pass at build time),
@@ -30,19 +33,25 @@ instead of d-float vectors — a 32× storage/IO cut at m=8, dim=64.
 
 from __future__ import annotations
 
+from itertools import zip_longest
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from airflow_courier_payout_ledger_pipeline_spark.operators.similarity import (
-    _centroid_map_sql,
-    _centroid_probes,
+    _empty_adc_result,
     _pq_adc_dist,
-    _pq_adc_table,
     _pq_codes,
-    _probes_via_join,
-    _resolve_assign_mode,
+    _sq_l2,
     exact_rerank,
     ivf_list_state,
     merge_ivf_list_states,
@@ -268,8 +277,7 @@ def build_residual_ivfpq_index(
                 (spark.createDataFrame([], _STATE_SCHEMA), layer, LIST_STATE),
             ]
         )
-    mode = _resolve_assign_mode(assign_mode, centroids)
-    codes = residual_frame(emb, centroids, id_col, vec_col, assign_mode=mode).select(
+    codes = residual_frame(emb, centroids, id_col, vec_col, assign_mode=assign_mode).select(
         F.col(id_col),
         F.col("centroid"),
         _pq_codes("__res", codebooks).alias("pq_codes"),
@@ -286,7 +294,7 @@ def build_residual_ivfpq_index(
         ],
         _CODEBOOKS_SCHEMA,
     )
-    state = ivf_list_state(emb, centroids, id_col, vec_col, assign_mode=mode)
+    state = ivf_list_state(emb, centroids, id_col, vec_col, assign_mode=assign_mode)
     return lake.commit_multi(
         [
             (codes, layer, CODES),
@@ -352,9 +360,8 @@ def extend_residual_ivfpq_index(
     new_rows = increment.join(
         old_codes.select(F.col(id_col)), id_col, "left_anti"
     )
-    mode = _resolve_assign_mode(assign_mode, centroids)
     new_codes = residual_frame(
-        new_rows, centroids, id_col, vec_col, assign_mode=mode
+        new_rows, centroids, id_col, vec_col, assign_mode=assign_mode
     ).select(
         F.col(id_col),
         F.col("centroid"),
@@ -364,7 +371,8 @@ def extend_residual_ivfpq_index(
         spark, layer, LIST_STATE, StructType.fromDDL(_STATE_SCHEMA)
     )
     state = merge_ivf_list_states(
-        old_state, ivf_list_state(new_rows, centroids, id_col, vec_col, assign_mode=mode)
+        old_state,
+        ivf_list_state(new_rows, centroids, id_col, vec_col, assign_mode=assign_mode),
     )
     # O(increment) write: stage ONLY the new codes dir; the manifest's codes
     # entry becomes the old version list + the new dir (multi-file version).
@@ -437,6 +445,41 @@ def load_index_artifacts(
     return result
 
 
+def _probe_tables(
+    vec: list | None,
+    centroids: list[tuple[int, list[float]]],
+    codebooks: list[list[list[float]]],
+    nprobe: int,
+) -> list[tuple[int, list[list[float | None]]]]:
+    """One query's probed cells, nearest first, each with the ADC table of
+    the query's residual against that cell — the driver twin of the
+    ``_centroid_probes`` / residual / ``_pq_adc_table`` expressions of
+    ``similarity.ivf_pq_residual_topk``, built from the same ``_sq_l2``
+    fold, so every entry is bit-identical to the Spark one. Probe order is
+    Spark's ascending (distance, id) order: NULL distances first, NaN last,
+    ties to the lower centroid id. The residual pads like ``zip_with``. A
+    NULL vector gives the same all-NULL tables as an empty one, as in SQL."""
+    vec = vec or []
+    dim, sub = len(centroids[0][1]), len(codebooks[0][0])
+
+    def order(d: float | None) -> tuple[int, float]:
+        return (0, 0.0) if d is None else (2, 0.0) if d != d else (1, d)
+
+    ranked = sorted((order(_sq_l2(vec[:dim], cv)), cid, cv) for cid, cv in centroids)
+    out = []
+    for _, cid, cvec in ranked[:nprobe]:
+        res = [
+            None if a is None or b is None else float(a) - b
+            for a, b in zip_longest(vec, cvec)
+        ]
+        adc = [
+            [_sq_l2(res[j * sub : (j + 1) * sub], cw) for cw in book]
+            for j, book in enumerate(codebooks)
+        ]
+        out.append((cid, adc))
+    return out
+
+
 def search_residual_ivfpq_index(
     lake: Lakehouse,
     layer: str,
@@ -445,70 +488,55 @@ def search_residual_ivfpq_index(
     nprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_mode: str = "auto",
 ) -> DataFrame:
     """ADC top-k from the PERSISTED index: the committed codes table is the
-    only corpus-sized input (raw vectors never load); queries build their
-    per-cell residual ADC tables from the committed driver artifacts and
-    broadcast into the centroid equi-join — the identical topology (and
-    byte-identical results) as ``similarity.ivf_pq_residual_topk`` over the
-    raw corpus."""
+    only corpus-sized input (raw vectors never load). The query side runs on
+    the driver: ``queries`` is collected HERE, when the search is
+    constructed (not when its result is collected), and each query's
+    probes, residuals and ADC tables come from the cached driver artifacts
+    (``_probe_tables``). They enter the plan as an Arrow-built local
+    relation (query_id, centroid, __adc), |Q|·nprobe rows of m·kc doubles,
+    broadcast into the centroid equi-join over the codes, which are scanned
+    for the probed cells only — the same topology, and byte-identical
+    results, as ``similarity.ivf_pq_residual_topk`` over the raw corpus.
+    The plan carries those tables as data, not as SQL text, so constructing
+    it costs no parse or analysis per query; the broadcast side held the
+    same tables on the driver before. ``queries`` may carry ids of any type
+    the index was built with."""
+    if nprobe < 0:
+        raise ValueError(f"nprobe must be >= 0, got {nprobe}")
     spark = queries.sparkSession
     centroids, codebooks = load_index_artifacts(lake, layer, spark)
     id_field = queries.select(F.col(id_col)).schema.fields[0]
     codes = _read_codes(lake, layer, spark, id_field)
-    if not centroids or not codebooks:
-        return (
-            codes.select(F.col(id_col).alias("neighbor_id"))
-            .limit(0)
-            .crossJoin(queries.select(F.col(id_col).alias("query_id")).limit(0))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.lit(0.0).alias("adc_dist"),
-                F.lit(0).alias("rank"),
-            )
-        )
-    mode = _resolve_assign_mode(assign_mode, centroids)
-    if mode == "literal":
-        cmap = _centroid_map_sql(centroids)
-        q = (
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("__qv"),
-                F.explode(_centroid_probes(vec_col, centroids, nprobe)).alias(
-                    "centroid"
-                ),
-            )
-            .withColumn(
-                "__res",
-                F.expr(
-                    f"zip_with(CAST(__qv AS ARRAY<DOUBLE>), "
-                    f"element_at({cmap}, centroid), (x, y) -> x - y)"
-                ),
-            )
-            .select(
-                "query_id", _pq_adc_table("__res", codebooks).alias("__adc"), "centroid"
-            )
-        )
-    else:
-        q = (
-            _probes_via_join(queries, centroids, nprobe, id_col, vec_col)
-            .withColumn(
-                "__res",
-                F.expr(
-                    f"zip_with(CAST(`{vec_col}` AS ARRAY<DOUBLE>), __cvec, "
-                    "(x, y) -> x - y)"
-                ),
-            )
-            .select(
-                F.col(id_col).alias("query_id"),
-                _pq_adc_table("__res", codebooks).alias("__adc"),
-                "centroid",
-            )
-        )
+    rows = []
+    if centroids and codebooks:
+        for qid, vec in queries.select(F.col(id_col), F.col(vec_col)).collect():
+            if qid is None:  # a NULL id never passes the self-match filter
+                continue
+            rows += [
+                (qid, cid, adc)
+                for cid, adc in _probe_tables(vec, centroids, codebooks, nprobe)
+            ]
+    if not rows:
+        return _empty_adc_result(codes, queries, id_col)
+    # Arrow-encoded, the tables become a LocalRelation: no SQL text to parse
+    # or analyse however many queries come, ids keep their type, and doubles
+    # cross bit for bit
+    schema = StructType(
+        [
+            StructField("query_id", id_field.dataType),
+            StructField("centroid", IntegerType()),
+            StructField("__adc", ArrayType(ArrayType(DoubleType()))),
+        ]
+    )
+    q = spark.createDataFrame(
+        LocalDataToArrowConversion.convert(rows, schema, False), schema
+    )
+    probed = sorted({cid for _, cid, _ in rows})
     pairs = (
-        codes.withColumnRenamed(id_col, "neighbor_id")
+        codes.where(F.col("centroid").isin(probed))
+        .withColumnRenamed(id_col, "neighbor_id")
         .join(F.broadcast(q), "centroid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -533,7 +561,6 @@ def refine_search_residual_ivfpq_index(
     nprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_mode: str = "auto",
 ) -> DataFrame:
     """Two-stage search from the PERSISTED index — FAISS IndexRefine over a
     committed IVF-ADC index, the steady-state production shape: stage one
@@ -556,6 +583,5 @@ def refine_search_residual_ivfpq_index(
         nprobe=nprobe,
         id_col=id_col,
         vec_col=vec_col,
-        assign_mode=assign_mode,
     ).select("query_id", "neighbor_id")
     return exact_rerank(corpus, queries, cand, k=k, id_col=id_col, vec_col=vec_col)

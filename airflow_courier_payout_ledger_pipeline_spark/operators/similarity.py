@@ -1109,6 +1109,22 @@ def _sq_l2_sql(vec_col: str, start: int, n: int, centroid: list[float]) -> str:
     )
 
 
+def _sq_l2(x: list | None, y: list[float]) -> float | None:
+    """Driver twin of ``_sq_l2_sql`` over an already-sliced ``x``: the same
+    sequential double fold, so the result is bit-identical to Spark's. NULL
+    semantics follow the SQL: a NULL array or element, or a length mismatch
+    (``zip_with`` pads the shorter side with NULL), gives None."""
+    if x is None or len(x) != len(y):
+        return None
+    acc = 0.0
+    for a, b in zip(x, y):
+        if a is None:
+            return None
+        d = float(a) - b
+        acc += d * d
+    return acc
+
+
 def pq_codebooks_from_seeds(
     seeds: list[tuple[int, list[float]]], m: int
 ) -> list[list[list[float]]]:

@@ -329,8 +329,8 @@ def deliveries_stg_to_dds_job(spark: SparkSession, lake: Lakehouse) -> None:
 
 
 def courier_ledger_update_job(spark: SparkSession, lake: Lakehouse) -> None:
-    """sql/courier_ledger_update.sql: full deterministic mart recompute + SCD1 upsert
-    on (courier_id, settlement_year, settlement_month).
+    """sql/courier_ledger_update.sql: full deterministic mart recompute, written
+    over the mart (the recompute is total, so it replaces the mart whole).
 
     The mart DDL's constraints (NOT NULL / CHECK, DDL_cdm.dm_courier_ledger.sql:20-28)
     are enforced as a quarantine split before the write: an all-unrated
@@ -338,7 +338,7 @@ def courier_ledger_update_job(spark: SparkSession, lake: Lakehouse) -> None:
     arithmetic, which would *abort* its whole INSERT — SURVEY.md §2.3); we keep the
     clean rows flowing and land violations in dm_courier_ledger_quarantine."""
     # The mart frame feeds THREE actions (quarantine write, UNIQUE gate,
-    # SCD1 upsert) — persist it so the facts scan + joins + agg run once;
+    # mart write) — persist it so the facts scan + joins + agg run once;
     # the cached frame is mart-grain (couriers × months), tiny at any SF.
     mart = courier_ledger(
         lake.read(spark, "dds", "fct_deliveries", S.FCT_DELIVERIES_SCHEMA),
@@ -358,17 +358,12 @@ def courier_ledger_update_job(spark: SparkSession, lake: Lakehouse) -> None:
         # UNIQUE (courier_id, settlement_year, settlement_month) — the DDL's
         # :29 constraint; a duplicate key here means corrupt dims (two
         # dm_couriers rows per id), which must abort the mart write, not
-        # SCD1-overwrite nondeterministically
+        # write both rows
         assert_unique(clean, ["courier_id", "settlement_year", "settlement_month"])
-        # Generic SCD1 entry: against an unpartitioned mart this is the full
-        # staging-swap; partition the mart by settlement_month (month is part
-        # of the upsert key, so rows never migrate partitions) and the same
-        # call rewrites only the months present in the recompute — the
-        # MERGE-with-pruning shape a 100 TB deployment wants.
-        lake.upsert_scd1(
-            spark, clean, "cdm", "dm_courier_ledger", S.DM_COURIER_LEDGER_SCHEMA,
-            ["courier_id", "settlement_year", "settlement_month"],
-        )
+        # The recompute covers every courier-month, so the mart IS its clean
+        # rows: an overwrite, not an upsert, or a row that moved to the
+        # quarantine would survive in the mart next to it.
+        lake.overwrite(clean, "cdm", "dm_courier_ledger")
     finally:
         mart.unpersist()
 

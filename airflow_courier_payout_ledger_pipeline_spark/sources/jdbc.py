@@ -17,7 +17,10 @@ UPDATE`` (sql/couriers_stg_to_dds.sql:22-27, sql/courier_ledger_update.sql:
   (Derby 10.11+, Postgres 15+; older Postgres: swap the MERGE text for
   INSERT..ON CONFLICT — same staging flow) executed driver-side in a single
   transaction. Row-at-a-time upserts through the driver do not scale past
-  toy increments; per-row Python never touches this path.
+  toy increments; per-row Python never touches this path;
+- **overwrites** take the same staging flow (``replace_rows``: DELETE +
+  INSERT..SELECT in one transaction), so a replaced table keeps its DDL and
+  is never seen empty or half-written.
 
 Tested against Derby embedded (the JDBC engine already on Spark's classpath —
 no new dependency); the surface is driver-agnostic and the tests pin the
@@ -28,7 +31,7 @@ equivalence laws JDBC upsert ≡ ``operators.merge.scd1_upsert`` /
 from __future__ import annotations
 
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -201,30 +204,66 @@ def _staged_merge(
         # At very large increments pre-dedupe with merge._dedup_within_batch
         # and pass check_unique=False.
         assert_unique(increment, keys)
-    # Per-run staging name: two concurrent upserts to the same target must not
-    # overwrite each other's staging rows mid-merge. Target-level MERGE
+    _via_staging(
+        increment, url, target,
+        lambda stg: [
+            _merge_sql(target, stg, increment.columns, keys, update_on_match=update_on_match)
+        ],
+        staging=staging, driver=driver,
+    )
+
+
+def _via_staging(
+    df: DataFrame,
+    url: str,
+    target: str,
+    statements: Callable[[str], list[str]],
+    *,
+    staging: str | None = None,
+    driver: str | None = None,
+) -> None:
+    """Bulk-load ``df`` into a staging table through the parallel writer, then
+    run ``statements(staging)`` and drop the staging table in ONE transaction."""
+    # Per-run staging name: two concurrent writes to the same target must not
+    # overwrite each other's staging rows mid-statement. Target-level
     # serialization is still the database's job (row locks); the unique name
     # only removes the staging collision. Callers pinning `staging` explicitly
     # accept single-writer semantics for that name.
     staging = staging or f"{target}_stg_{uuid.uuid4().hex[:12]}"
-    write_append(increment, url, staging, driver=driver, mode="overwrite")
+    write_append(df, url, staging, driver=driver, mode="overwrite")
     try:
         execute(
-            increment.sparkSession,
-            url,
-            _merge_sql(target, staging, increment.columns, keys, update_on_match=update_on_match),
-            f"DROP TABLE {staging}",
+            df.sparkSession, url, *statements(staging), f"DROP TABLE {staging}",
             driver=driver,
         )
     except Exception:
-        # The MERGE transaction rolled back; the staging table was committed
-        # by the bulk load above and would otherwise linger. Best-effort drop
-        # (its own transaction), never masking the original failure.
+        # The transaction rolled back; the staging table was committed by the
+        # bulk load above and would otherwise linger. Best-effort drop (its
+        # own transaction), never masking the original failure.
         try:
-            execute(increment.sparkSession, url, f"DROP TABLE {staging}", driver=driver)
+            execute(df.sparkSession, url, f"DROP TABLE {staging}", driver=driver)
         except Exception:
             pass
         raise
+
+
+def replace_rows(
+    df: DataFrame, url: str, target: str, *, driver: str | None = None
+) -> None:
+    """Transactional overwrite of an EXISTING table: parallel bulk load into
+    staging, then DELETE + INSERT..SELECT in one transaction. Readers see the
+    old rows or the new ones, a failure (a constraint the new rows break)
+    keeps the old ones, and the table keeps its DDL — unlike the JDBC
+    writer's ``overwrite`` mode, which drops and recreates it."""
+    cols = ", ".join(_q(c) for c in df.columns)
+    _via_staging(
+        df, url, target,
+        lambda stg: [
+            f"DELETE FROM {target}",
+            f"INSERT INTO {target} ({cols}) SELECT {cols} FROM {stg}",
+        ],
+        driver=driver,
+    )
 
 
 def upsert_scd1(
@@ -624,10 +663,16 @@ class JdbcWarehouse:
         )
 
     def overwrite(self, df: DataFrame, layer: str, table: str) -> None:
-        write_append(
-            self._to_sql_types(df), self.url, self._name(layer, table),
-            driver=self.driver, mode="overwrite",
-        )
+        """Atomic replace (``replace_rows``) that keeps the table's DDL; the
+        first write creates the table from the frame's schema."""
+        name = self._name(layer, table)
+        sql_df = self._to_sql_types(df)
+        try:
+            replace_rows(sql_df, self.url, name, driver=self.driver)
+        except Exception as e:
+            if not self._is_missing_table(e, name):
+                raise
+            write_append(sql_df, self.url, name, driver=self.driver, mode="overwrite")
 
     def _is_empty_or_missing(self, spark: SparkSession, name: str) -> bool:
         """Cheap bootstrap probe: 1-row scan, no schema-cast projection."""

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -19,3 +21,28 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """Counts the Spark jobs a block starts, through a job group::
+
+        with spark_jobs() as jobs:
+            df.collect()
+        assert jobs() <= 3
+    """
+    sc = spark.sparkContext
+
+    @contextmanager
+    def count():
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        # the group id alone tags the jobs; setJobGroup would also leave a
+        # description and a cancel flag on every later job of the session
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    return count

@@ -45,18 +45,103 @@ def test_persisted_search_matches_on_the_fly(spark, corpus, artifacts, tmp_path)
     cents, books = artifacts
     lake = Lakehouse(str(tmp_path))
     build_residual_ivfpq_index(lake, "idx", corpus, cents, books)
-    q = corpus.filter(F.col("vec_id") < 4)
-    for nprobe in (1, 2):
-        fly = sorted(
-            map(tuple, ivf_pq_residual_topk(corpus, q, cents, books, k=3, nprobe=nprobe).collect())
-        )
-        idx = sorted(
-            map(tuple, search_residual_ivfpq_index(lake, "idx", q, k=3, nprobe=nprobe).collect())
-        )
-        assert fly == idx
+    # query ids are corpus ids (the self-match filter is exercised); a
+    # 1-row frame, nprobe past the cell count, and NULL / NaN / short query
+    # vectors are covered too (repr compares NaN distances)
+    schema = "vec_id long, embedding array<float>"
+    one = spark.createDataFrame([(7, [0.5, 9.5, 0.25, 0.0])], schema)
+    odd = spark.createDataFrame(
+        [(90, None), (91, [float("nan"), 9.5, 0.25, 0.0]), (92, [1.0, 2.0])], schema
+    )
+    for q in (corpus.filter(F.col("vec_id") < 4), one, odd):
+        for nprobe in (1, 2, 3):
+            fly = sorted(map(repr, ivf_pq_residual_topk(
+                corpus, q, cents, books, k=3, nprobe=nprobe).collect()))
+            idx = sorted(map(repr, search_residual_ivfpq_index(
+                lake, "idx", q, k=3, nprobe=nprobe).collect()))
+            assert fly == idx and fly
     # round-trip of the driver artifacts is exact
     rc, rb = load_index_artifacts(lake, "idx", spark)
     assert rc == cents and rb == books
+    # ids keep their type through the driver-side query tables: a string id
+    # with a quote and a non-ASCII letter, and a binary id that is not UTF-8
+    for layer, vid in (
+        ("s", F.concat(F.lit("v'é"), F.col("vec_id").cast("string"))),
+        ("b", F.unhex(F.concat(F.lit("FF"), F.hex("vec_id")))),
+    ):
+        typed = corpus.withColumn("vec_id", vid)
+        build_residual_ivfpq_index(lake, layer, typed, cents, books)
+        q = corpus.filter(F.col("vec_id") < 4).withColumn("vec_id", vid)
+        fly = sorted(map(repr, ivf_pq_residual_topk(typed, q, cents, books, k=3, nprobe=2).collect()))
+        idx = sorted(map(repr, search_residual_ivfpq_index(lake, layer, q, k=3, nprobe=2).collect()))
+        assert fly == idx and fly
+
+
+def test_driver_fold_is_bit_identical_to_spark_fold(spark):
+    """The driver-side query tables are exact only if ``_sq_l2`` folds like
+    ``_sq_l2_sql``: same operation order, same NULL results. Compared bit for
+    bit on cancellation-prone values; the last case tells the sequential fold
+    from an exactly rounded sum."""
+    import math
+
+    from airflow_courier_payout_ledger_pipeline_spark.operators.similarity import (
+        _sq_l2,
+        _sq_l2_sql,
+    )
+
+    cases = [
+        ([1e16, 1.0, -1e16, 1.0], [0.0, 0.0, 0.0, 0.0]),
+        ([1e16, 1.0, -1e16, 1.0], [1.0, 1e16, 1.0, -1e16]),
+        ([0.1, 0.2, 0.3, 1e-300], [0.3, 0.1, 0.2, -1e-300]),
+        ([2.0**27, 1.0, 1.0, 1.0], [0.0, 0.0, 0.0, 0.0]),
+        ([1.0, None, 2.0, 3.0], [0.0, 0.0, 0.0, 0.0]),
+        ([1.0, 2.0], [0.0, 0.0, 0.0, 0.0]),
+        (None, [0.0, 0.0, 0.0, 0.0]),
+    ]
+    df = spark.createDataFrame(
+        [(i, x) for i, (x, _) in enumerate(cases)], "i int, v array<double>"
+    )
+    folds = [F.expr(_sq_l2_sql("v", 1, 4, y)).alias(f"d{i}") for i, (_, y) in enumerate(cases)]
+    got = {r["i"]: r[f"d{r['i']}"] for r in df.select("i", *folds).collect()}
+    for i, (x, y) in enumerate(cases):
+        mine = _sq_l2(None if x is None else x[:4], y)
+        assert (None if mine is None else mine.hex()) == (
+            None if got[i] is None else got[i].hex()
+        ), (x, y)
+    assert _sq_l2(cases[3][0], cases[3][1]) != math.fsum(x * x for x in cases[3][0])
+
+
+def test_search_with_no_query_rows_is_empty_with_same_schema(
+    spark, corpus, artifacts, tmp_path
+):
+    cents, books = artifacts
+    lake = Lakehouse(str(tmp_path))
+    build_residual_ivfpq_index(lake, "idx", corpus, cents, books)
+    full = search_residual_ivfpq_index(lake, "idx", corpus.filter(F.col("vec_id") < 2))
+    none = search_residual_ivfpq_index(lake, "idx", corpus.filter(F.col("vec_id") < 0))
+    assert none.collect() == []
+    assert [(f.name, f.dataType) for f in none.schema.fields] == [
+        (f.name, f.dataType) for f in full.schema.fields
+    ]
+
+
+def test_indexed_search_job_budget(spark, spark_jobs, corpus, artifacts, tmp_path):
+    """Constructing a 1-row search reads the query frame (one job) and
+    nothing else once the index artifacts are cached; the whole search
+    stays within four jobs."""
+    cents, books = artifacts
+    lake = Lakehouse(str(tmp_path))
+    build_residual_ivfpq_index(lake, "idx", corpus, cents, books)
+    schema = "vec_id long, embedding array<float>"
+    q = spark.createDataFrame([(100, [9.0, 1.0, 0.5, 0.0])], schema)
+    search_residual_ivfpq_index(lake, "idx", q, k=3).collect()  # warm the caches
+    q = spark.createDataFrame([(101, [1.0, 9.0, 0.0, 0.5])], schema)
+    with spark_jobs() as construct:
+        df = search_residual_ivfpq_index(lake, "idx", q, k=3)
+    with spark_jobs() as execute:
+        assert len(df.collect()) == 3
+    assert construct() == 1
+    assert construct() + execute() <= 4
 
 
 def test_committed_list_counts_equal_assignment_counts(spark, corpus, artifacts, tmp_path):

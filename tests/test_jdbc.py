@@ -266,6 +266,71 @@ def test_full_dag_runs_on_jdbc_warehouse_and_matches_lakehouse(spark, url, tmp_p
     assert _rows(again, cols) == _rows(lake_mart, cols)
 
 
+def test_jdbc_mart_holds_exactly_the_recompute(spark, url):
+    """The JDBC side of tests/test_validate.py::
+    test_mart_row_moving_to_quarantine_leaves_the_mart: the mart job replaces
+    the mart with the recompute's clean rows on the warehouse too, so a mart
+    row the recompute no longer yields (there: a courier-month that moved to
+    the quarantine) is gone after the job. That case itself cannot run on
+    Derby, which rejects a NULL string bound into a VARCHAR column, so the
+    stale row is planted directly."""
+    from airflow_courier_payout_ledger_pipeline_spark import schemas as S
+    from airflow_courier_payout_ledger_pipeline_spark.plans import promotions as P
+    from airflow_courier_payout_ledger_pipeline_spark.sources.jdbc import JdbcWarehouse
+    from tests.test_pipeline import DAY1_COURIERS, DAY1_DELIVERIES, fake_api
+
+    wh = JdbcWarehouse(url, driver=DRIVER)
+    P.run_daily(
+        spark, wh, fake_api(DAY1_COURIERS),
+        fake_api(DAY1_DELIVERIES, "delivery_ts"), "2023-05-11",
+    )
+
+    def mart():
+        return _rows(wh.read(spark, "cdm", "dm_courier_ledger", S.DM_COURIER_LEDGER_SCHEMA))
+
+    fresh = mart()
+    assert fresh
+    stale = wh.read(spark, "cdm", "dm_courier_ledger", S.DM_COURIER_LEDGER_SCHEMA).limit(1)
+    wh.append(stale.withColumn("settlement_month", F.lit(1)), "cdm", "dm_courier_ledger")
+    assert len(mart()) == len(fresh) + 1
+    P.courier_ledger_update_job(spark, wh)
+    assert mart() == fresh
+
+
+def test_warehouse_overwrite_is_atomic_and_keeps_table_ddl(spark, url):
+    """``JdbcWarehouse.overwrite`` replaces the rows of an existing table in
+    one transaction: the table's own constraints survive the replace (the
+    JDBC writer's overwrite mode would drop and recreate it from the frame's
+    schema), new rows that break them fail the write and leave the old rows,
+    and no staging table is left behind either way."""
+    from airflow_courier_payout_ledger_pipeline_spark.sources.jdbc import JdbcWarehouse
+
+    wh = JdbcWarehouse(url, driver=DRIVER)
+    jdbc.execute(
+        spark, url,
+        'CREATE TABLE cdm_t_ow ("k" INT NOT NULL PRIMARY KEY, "v" INT CHECK ("v" >= 0))',
+        "INSERT INTO cdm_t_ow VALUES (1, 1), (2, 2)",
+        driver=DRIVER,
+    )
+
+    def frame(*rows):
+        return spark.createDataFrame(list(rows), "k int, v int")
+
+    def rows():
+        return _rows(jdbc.read_table(spark, url, "cdm_t_ow", driver=DRIVER))
+
+    wh.overwrite(frame((3, 3), (4, 4)), "cdm", "t_ow")
+    assert rows() == [(3, 3), (4, 4)]
+    for bad in (frame((5, -1)), frame((6, 1), (6, 2))):  # CHECK, PRIMARY KEY
+        with pytest.raises(Exception):
+            wh.overwrite(bad, "cdm", "t_ow")
+        assert rows() == [(3, 3), (4, 4)]
+    assert jdbc.sweep_stale_staging(spark, url, "cdm_t_ow", driver=DRIVER) == []
+    # a table that does not exist yet is created by the first overwrite
+    wh.overwrite(frame((7, 7)), "cdm", "t_new")
+    assert _rows(jdbc.read_table(spark, url, "cdm_t_new", driver=DRIVER)) == [(7, 7)]
+
+
 def test_warehouse_upsert_dedupes_within_batch_like_lakehouse(spark, url):
     """A page-overlap increment carrying the same key twice must upsert (one
     row per key), exactly like the parquet Lakehouse path — not crash the

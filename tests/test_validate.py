@@ -84,6 +84,42 @@ def test_mart_null_hazard_goes_to_quarantine(spark, tmp_path):
     }
 
 
+def test_mart_row_moving_to_quarantine_leaves_the_mart(spark, tmp_path):
+    """The mart job recomputes every courier-month, so the mart must hold
+    exactly the recompute's clean rows: a courier-month that turns invalid
+    (its courier's name arrives NULL on day 2) moves to the quarantine and
+    its day-1 mart row goes, rather than surviving next to it."""
+    from decimal import Decimal
+
+    from tests.test_pipeline import _delivery, fake_api
+    from airflow_courier_payout_ledger_pipeline_spark import schemas as S
+    from airflow_courier_payout_ledger_pipeline_spark.plans import promotions as P
+    from airflow_courier_payout_ledger_pipeline_spark.sources.lakehouse import Lakehouse
+
+    lake = Lakehouse(str(tmp_path / "lake"))
+    d1 = _delivery("d1", "o1", "c1", "2023-05-10 10:00:00", "2023-05-10 09:30:00", 5, 1000.00, 10.00)
+    d2 = _delivery("d2", "o2", "c1", "2023-05-11 10:00:00", "2023-05-11 09:30:00", 5, 500.00, 5.00)
+    P.run_daily(
+        spark, lake, fake_api([{"_id": "c1", "name": "Alice"}]),
+        fake_api([d1], "delivery_ts"), "2023-05-11",
+    )
+    mart = lake.read(spark, "cdm", "dm_courier_ledger", S.DM_COURIER_LEDGER_SCHEMA).collect()
+    assert [(r.courier_name, r.orders_count) for r in mart] == [("Alice", 1)]
+    key = mart[0].courier_id
+
+    P.run_daily(
+        spark, lake, fake_api([{"_id": "c1", "name": None}]),
+        fake_api([d1, d2], "delivery_ts"), "2023-05-12",
+    )
+    assert lake.read(spark, "cdm", "dm_courier_ledger", S.DM_COURIER_LEDGER_SCHEMA).collect() == []
+    quarantined = spark.read.parquet(lake.path("cdm", "dm_courier_ledger_quarantine")).collect()
+    assert [
+        (q.courier_id, q.settlement_month, q.orders_count, q.orders_total_sum)
+        for q in quarantined
+    ] == [(key, 5, 2, Decimal("1500.00"))]
+    assert "courier_name_not_null" in quarantined[0].violations
+
+
 def test_fct_ddl_gate_quarantines_violating_increment(spark, tmp_path):
     """The fct DDL constraints (rating ∈ [0,5], money ≥ 0 —
     sql/DDL_dds.fct_deliveries.sql:14-21) are a MANDATORY gate on the fact
