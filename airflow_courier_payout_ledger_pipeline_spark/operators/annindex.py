@@ -37,7 +37,6 @@ from itertools import zip_longest
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.conversion import LocalDataToArrowConversion
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -57,6 +56,7 @@ from airflow_courier_payout_ledger_pipeline_spark.operators.similarity import (
     merge_ivf_list_states,
     residual_frame,
 )
+from airflow_courier_payout_ledger_pipeline_spark.session import local_frame
 from airflow_courier_payout_ledger_pipeline_spark.sources.lakehouse import Lakehouse
 
 #: index table names under the caller's layer
@@ -530,9 +530,7 @@ def search_residual_ivfpq_index(
             StructField("__adc", ArrayType(ArrayType(DoubleType()))),
         ]
     )
-    q = spark.createDataFrame(
-        LocalDataToArrowConversion.convert(rows, schema, False), schema
-    )
+    q = local_frame(spark, rows, schema)
     probed = sorted({cid for _, cid, _ in rows})
     pairs = (
         codes.where(F.col("centroid").isin(probed))

@@ -10,6 +10,7 @@ same operators map to ``MERGE INTO`` — the plan layer is storage-agnostic.
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 import shutil
@@ -21,6 +22,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from airflow_courier_payout_ledger_pipeline_spark.session import local_frame
 
 
 def atomic_write_text(path: Path, text: str) -> None:
@@ -54,7 +57,18 @@ class Lakehouse:
         return str(self.root / layer / table)
 
     def exists(self, layer: str, table: str) -> bool:
-        return (self.root / layer / table).exists()
+        """Whether the table has been written. First rolls back an
+        :meth:`overwrite` whose swap was cut between its two renames: the
+        table directory is then gone and its previous state sits alone in
+        ``<table>.__old_*``. Renaming that back restores the last committed
+        state (the crashed job's replay is idempotent), so the table never
+        reads as empty and the next upsert merges into its full state."""
+        final = self.root / layer / table
+        if not final.exists():
+            olds = list(final.parent.glob(f"{glob.escape(final.name)}.__old_*"))
+            if len(olds) == 1:
+                olds[0].rename(final)
+        return final.exists()
 
     def wm_store(self, layer: str, table: str = "srv_wf_settings"):
         """The layer's watermark cursor store. Storage backends each provide
@@ -73,7 +87,7 @@ class Lakehouse:
         """Read a table; a never-written table reads as empty with its declared
         schema (first-run bootstrap)."""
         if not self.exists(layer, table):
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return spark.read.schema(schema).parquet(self.path(layer, table))
 
     def read_evolved(self, spark: SparkSession, layer: str, table: str) -> DataFrame:
@@ -124,7 +138,7 @@ class Lakehouse:
             assert name.startswith("_"), f"sidecar {name!r} must start with '_'"
             (tmp / name).write_text(text)
         old = final.with_name(f"{final.name}.__old_{uuid.uuid4().hex[:8]}")
-        if final.exists():
+        if self.exists(layer, table):
             final.rename(old)
         tmp.rename(final)
         if old.exists():
@@ -488,7 +502,7 @@ class Lakehouse:
         files a snapshot's log entry lists."""
         vs = self.as_versions(self.current_manifest().get(f"{layer}/{table}"))
         if not vs:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         if len(vs) == 1:
             return self.read_versioned(spark, layer, table, schema, version=vs[0])
         paths = []
@@ -514,7 +528,7 @@ class Lakehouse:
         historical ``version`` (time travel). Never-written tables read empty."""
         v = self.current_version(layer, table) if version is None else version
         if v is None:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         path = self.root / layer / table / f"v={v}"
         if not path.exists():
             raise FileNotFoundError(
@@ -695,7 +709,7 @@ class Lakehouse:
         partition column (an upsert routed to the pruned path would rewrite
         snapshot dirs as if they were partitions and corrupt the layout)."""
         root = self.root / layer / table
-        if not root.exists() or self._pointer(layer, table).exists():
+        if not self.exists(layer, table) or self._pointer(layer, table).exists():
             return None
         for d in root.iterdir():
             if d.is_dir() and "=" in d.name and not d.name.startswith(("_", ".")):
@@ -898,7 +912,7 @@ class Lakehouse:
                 .filter(F.col(partition_col).isin(parts))
             )
         else:
-            existing = spark.createDataFrame([], schema)
+            existing = local_frame(spark, [], schema)
         merged = scd1_upsert(existing, increment, list(keys), tiebreaker=tiebreaker)
 
         final = Path(self.path(layer, table))

@@ -24,6 +24,8 @@ from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from airflow_courier_payout_ledger_pipeline_spark.session import local_frame
+
 PAGE_SIZE = 50  # modules/load_couriers.py:12
 MAX_PAGES = 200  # modules/load_couriers.py:29
 
@@ -95,7 +97,13 @@ def records_to_bronze(
 ) -> DataFrame:
     """Raw records → bronze rows: typed key column(s) + the full JSON payload kept
     verbatim as text (``json_response``), mirroring the STG DDLs
-    (sql/DDL_stg.deliverysystem_deliveries.sql:5-10)."""
+    (sql/DDL_stg.deliverysystem_deliveries.sql:5-10).
+
+    The frame is a local relation (:func:`session.local_frame`), which the
+    promotions scan without a Python worker. A key that is not a string lands
+    as its text form (``7`` → ``"7"``) while the payload keeps the JSON
+    value; a naive timestamp reads as process-local time, a NULL one stays
+    NULL."""
     from datetime import datetime  # noqa: PLC0415
 
     rows = []
@@ -112,7 +120,7 @@ def records_to_bronze(
         schema = f"{key_col} string, {ts_col or 'ts'} timestamp, json_response string"
     else:
         schema = f"{key_col} string, json_response string"
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def fetch_pages_distributed(

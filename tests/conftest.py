@@ -46,3 +46,25 @@ def spark_jobs(spark):
             sc.setLocalProperty("spark.jobGroup.id", prev)
 
     return count
+
+
+@pytest.fixture
+def codegen_compiles(spark):
+    """Counts the classes whole-stage codegen compiles in a block (the JVM's
+    ``CodegenMetrics`` compile-time histogram counts one per class)::
+
+        with codegen_compiles() as compiled:
+            df.collect()
+        assert compiled() <= 20
+    """
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def total() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    @contextmanager
+    def count():
+        before = total()
+        yield lambda: total() - before
+
+    return count

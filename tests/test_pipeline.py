@@ -5,18 +5,22 @@ golden ledger output; plus re-run idempotency."""
 
 from __future__ import annotations
 
+import json
 import os
-from datetime import datetime
+import time
+from datetime import datetime, timezone
 from decimal import Decimal as D
 from pathlib import Path
 from unittest import mock
 
 import pytest
+from pyspark.sql import functions as F
 
 from airflow_courier_payout_ledger_pipeline_spark import schemas as S
 from airflow_courier_payout_ledger_pipeline_spark.plans import promotions as P
 from airflow_courier_payout_ledger_pipeline_spark.sources import lakehouse as L
 from airflow_courier_payout_ledger_pipeline_spark.sources.lakehouse import Lakehouse
+from airflow_courier_payout_ledger_pipeline_spark.sources.rest import records_to_bronze
 
 
 def fake_api(records: list[dict], time_field: str | None = None):
@@ -205,6 +209,68 @@ def test_rerun_is_idempotent(spark, lake):
     )
 
 
+def test_a_steady_day_reuses_compiled_code(spark, lake, codegen_compiles):
+    """A day whose plans match the previous day's reuses their compiled
+    classes: the codegen cache holds a whole DAG day. At Spark's default of
+    100 entries the third day recompiled ~170 classes; what remains are the
+    plans that inline the day's watermark literal."""
+    day3 = DAY2_DELIVERIES + [
+        _delivery("d6", "o6", "c2", "2023-05-12 09:00:00", "2023-05-12 08:00:00", 4, 800.00, 8.00),
+    ]
+    for ds, deliveries in (("2023-05-11", DAY1_DELIVERIES), ("2023-05-12", DAY2_DELIVERIES)):
+        P.run_daily(
+            spark, lake, fake_api(DAY2_COURIERS), fake_api(deliveries, "delivery_ts"), ds
+        )
+    with codegen_compiles() as compiled:
+        P.run_daily(
+            spark, lake, fake_api(DAY2_COURIERS), fake_api(day3, "delivery_ts"), "2023-05-13"
+        )
+    assert compiled() <= 20
+    assert _ledger(spark, lake)[("Bob", 2023, 5)].orders_total_sum == D("1300.00")
+
+
+def test_overwrite_cut_between_its_renames_keeps_the_last_state(spark, tmp_path):
+    """A crash inside ``Lakehouse.overwrite``'s swap, after the table moved
+    to ``__old_*`` and before the staged one took its place, leaves no table
+    directory. The next access rolls the old state back, so dm_couriers never
+    reads empty and the rerun day keeps yesterday's couriers (Bob has no
+    delivery today, so the upsert alone would not bring him back)."""
+
+    def day(lk, ds, deliveries):
+        P.run_daily(
+            spark, lk, fake_api(DAY2_COURIERS), fake_api(deliveries, "delivery_ts"), ds
+        )
+
+    def couriers(lk):
+        dmc = lk.read(spark, "dds", "dm_couriers", S.DM_COURIERS_SCHEMA)
+        return sorted((r.courier_key, r.courier_name) for r in dmc.collect())
+
+    crashed = Lakehouse(str(tmp_path / "crashed"))
+    day(crashed, "2023-05-11", DAY1_DELIVERIES)
+    real_rename = Path.rename
+
+    def rename(self, target):
+        if self.name.startswith("dm_couriers.__tmp_"):
+            raise RuntimeError("kill")
+        return real_rename(self, target)
+
+    with pytest.raises(RuntimeError, match="kill"), mock.patch.object(
+        L.Path, "rename", autospec=True, side_effect=rename
+    ):
+        day(crashed, "2023-05-12", DAY2_DELIVERIES)
+    dds = tmp_path / "crashed" / "dds"
+    assert not (dds / "dm_couriers").exists()
+    assert couriers(crashed) == [("c1", "Alice Cooper"), ("c2", "Bob")]
+    assert not list(dds.glob("dm_couriers.__old_*"))
+
+    day(crashed, "2023-05-12", DAY2_DELIVERIES)
+    clean = Lakehouse(str(tmp_path / "clean"))
+    day(clean, "2023-05-11", DAY1_DELIVERIES)
+    day(clean, "2023-05-12", DAY2_DELIVERIES)
+    assert couriers(crashed) == couriers(clean)
+    assert _ledger(spark, crashed) == _ledger(spark, clean)
+
+
 def test_missing_order_dim_drops_fact(spark, lake, monkeypatch):
     """A delivery whose order never reaches dm_orders is dropped by J2 (inner join),
     exactly like the reference (sql/deliveries_stg_to_dds.sql:33)."""
@@ -301,3 +367,81 @@ def test_distributed_fetch_paces_requests(spark):
     )
     assert df.count() == 200
     assert time.time() - t0 >= 3 * 0.2
+
+
+_BRONZE_RECORDS = [
+    {"delivery_id": "d1", "delivery_ts": "2023-05-10 10:00:00.123456"},
+    {"delivery_id": "d2", "delivery_ts": datetime(2023, 1, 2, 3, 4, 5)},
+    {"delivery_id": "d3", "delivery_ts": datetime(2023, 7, 1, 12, tzinfo=timezone.utc)},
+    {"delivery_id": "d4", "delivery_ts": datetime(1969, 12, 31, 23, 59, 59, 999999)},
+    {"delivery_id": "d5", "delivery_ts": None},
+    # a key that is not a string lands as its text, the payload keeps it
+    {"delivery_id": 7, "delivery_ts": "2023-05-10 11:00:00"},
+    {"delivery_id": True, "delivery_ts": "2023-05-10 12:00:00"},
+]
+
+
+def _bronze(spark, records):
+    return records_to_bronze(
+        spark, records, "delivery_id", "delivery_key", "delivery_ts", "delivery_ts"
+    )
+
+
+def test_bronze_and_bootstrap_frames_are_local_relations(spark, lake):
+    """Driver-built frames scan in the JVM: no RDD of Python rows, whose every
+    scan would run Python tasks."""
+    for df in (
+        _bronze(spark, _BRONZE_RECORDS),
+        records_to_bronze(spark, DAY1_COURIERS, "_id", "courier_key"),
+        lake.read(spark, "stg", "deliverysystem_deliveries", S.STG_DELIVERIES_SCHEMA),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert lake.read(spark, "dds", "dm_couriers", S.DM_COURIERS_SCHEMA).collect() == []
+
+
+def test_bronze_rows_equal_the_python_rows_path(spark):
+    """The bronze rows equal those of ``spark.createDataFrame(rows)``, the
+    path they replace: a naive timestamp reads as process-local time (here a
+    zone 4-5 hours off UTC), an aware one keeps its instant, NULL stays NULL,
+    and a non-string key becomes its text. Compared as epoch micros, so no
+    conversion on the way back can hide a shift."""
+    zone = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        rows = [
+            (
+                r["delivery_id"],
+                datetime.fromisoformat(r["delivery_ts"])
+                if isinstance(r["delivery_ts"], str)
+                else r["delivery_ts"],
+                json.dumps(r, ensure_ascii=False, default=str),
+            )
+            for r in _BRONZE_RECORDS
+        ]
+        old = spark.createDataFrame(
+            rows, "delivery_key string, delivery_ts timestamp, json_response string"
+        )
+        new = _bronze(spark, _BRONZE_RECORDS)
+        assert new.schema == old.schema
+
+        def micros(df):
+            return sorted(
+                df.select(
+                    "delivery_key", F.unix_micros("delivery_ts"), "json_response"
+                ).collect()
+            )
+
+        assert micros(new) == micros(old)
+        rows = {r[0]: r for r in micros(new)}
+        assert rows["d1"][1] == 1683727200123456  # 10:00 EDT = 14:00 UTC
+        assert json.loads(rows["7"][2])["delivery_id"] == 7
+        assert json.loads(rows["true"][2])["delivery_id"] is True
+    finally:
+        if zone is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = zone
+        time.tzset()
+

@@ -241,6 +241,21 @@ _FILE_EVIDENCE: dict[str, set[str]] = {
         "incremental_promotion",
         "scd0_insert_ignore",
     },
+    # the codegen cache sized for a DAG day and the Arrow-built local_frame
+    # helper; every registry query runs on a session get_spark starts, and
+    # the persisted-index search builds its query tables with the helper
+    "airflow_courier_payout_ledger_pipeline_spark/session.py": {
+        "courier_ledger",
+        "incremental_mart_maintenance",
+        "ann_index_persisted_search",
+    },
+    # records_to_bronze builds a local relation; no registry query extracts
+    # through it (tests/test_pipeline.py pins its rows and plan), so the REST
+    # module's distributed path and the promotion rail adjudicate
+    "airflow_courier_payout_ledger_pipeline_spark/sources/rest.py": {
+        "rest_page_fetch_distributed",
+        "incremental_promotion",
+    },
     "airflow_courier_payout_ledger_pipeline_spark/sources/jdbc.py": {
         "incremental_promotion",
         "scd0_insert_ignore",
