@@ -131,7 +131,7 @@ def _manifest_cache_key(lake: Lakehouse, layer: str) -> tuple | None:
     if mid is None:
         return None
     try:
-        mt = lake._manifest_pointer().stat().st_mtime_ns
+        mt = lake._manifest_head().stat().st_mtime_ns
     except OSError:
         return None
     return (str(lake.root), layer, mid, mt)

@@ -100,7 +100,8 @@ def snapshot_diff(
 ) -> DataFrame:
     """CDC-style reconciliation of two snapshots of one table: which keys were
     ``added``, ``removed``, or ``changed`` between versions (the read side of
-    Delta Change-Data-Feed; pairs with ``Lakehouse.read_versioned`` snapshots).
+    Delta Change-Data-Feed; pairs with two manifest-committed versions read
+    back through ``Lakehouse.read_versioned(version=)``).
     Unchanged keys drop out, so the output is the minimal changelog that
     replays old → new through ``scd1_upsert`` + delete.
 

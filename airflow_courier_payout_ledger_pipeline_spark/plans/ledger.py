@@ -16,8 +16,9 @@ Scale notes (100 TB):
   (a subtle reference semantic — covered by tests).
 - Inner joins silently drop facts with missing dims, exactly like the reference.
 - The mart is a full recompute every run (no watermark filter in
-  ``courier_ledger_update.sql``), idempotent by SCD1 upsert — see
-  ``operators/merge.py``.
+  ``courier_ledger_update.sql``), idempotent because the nightly job
+  overwrites the mart with it (``Lakehouse.overwrite``) — see
+  ``plans/promotions.courier_ledger_update_job``.
 """
 
 from __future__ import annotations

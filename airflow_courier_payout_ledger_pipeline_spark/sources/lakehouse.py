@@ -1,11 +1,26 @@
 """Layered lakehouse IO: stg (bronze) / dds (silver) / cdm (gold) parquet tables.
 
 Replaces the reference's Postgres schemas (``DWH Design (ENG).md:50-144``) with
-partitioned parquet directories. Upserted tables are rewritten via a staging-dir
-swap (write tmp → swap) because parquet has no in-place MERGE; the swap keeps
-readers from ever seeing a half-written table, and SCD0/SCD1 idempotency makes
-re-runs after a crash safe (SURVEY.md §2.6/§3.3). On Delta-enabled deployments the
-same operators map to ``MERGE INTO`` — the plan layer is storage-agnostic.
+partitioned parquet directories. Parquet has no in-place MERGE, so every write
+commits through one of three mechanisms:
+
+- :func:`atomic_write_text` — small documents: the watermark cursors and the
+  manifest pointer. Temp file, fsync, ``os.replace``.
+- :meth:`Lakehouse.overwrite` — flat tables (the nightly stg/dds/cdm tables
+  and their SCD1 upserts): write a staging dir, then swap it in with two
+  renames; a swap cut between them is rolled back by :meth:`Lakehouse.exists`.
+  Partitioned upserts and deletes swap only the partitions they touch
+  (:meth:`Lakehouse._swap_partitions`).
+- The commit manifest (:meth:`Lakehouse.commit_manifest` /
+  :meth:`Lakehouse.commit_multi`) — versioned tables (the search indexes):
+  stage immutable ``v=N`` snapshots, then publish any set of them in one
+  pointer flip. Readers resolve versions through the current manifest
+  (:meth:`Lakehouse.read_committed`), retired versions go with
+  :meth:`Lakehouse.retention_sweep`.
+
+SCD0/SCD1 idempotency makes re-runs after a crash safe (SURVEY.md §2.6/§3.3). On
+Delta-enabled deployments the same operators map to ``MERGE INTO`` — the plan
+layer is storage-agnostic.
 """
 
 from __future__ import annotations
@@ -139,6 +154,11 @@ class Lakehouse:
             (tmp / name).write_text(text)
         old = final.with_name(f"{final.name}.__old_{uuid.uuid4().hex[:8]}")
         if self.exists(layer, table):
+            # An earlier swap that crashed after its second rename left a
+            # stale __old_*; beside this swap's own, a cut between the renames
+            # below would leave two, and exists() could restore neither.
+            for stale in final.parent.glob(f"{glob.escape(final.name)}.__old_*"):
+                shutil.rmtree(stale)
             final.rename(old)
         tmp.rename(final)
         if old.exists():
@@ -148,27 +168,22 @@ class Lakehouse:
         p = self.root / layer / table / name
         return p.read_text() if p.exists() else None
 
-    # --- snapshot versioning (time travel) -------------------------------------------
+    # --- versioned tables: the commit manifest (M3 atomicity, SURVEY §2.6) -----------
     #
-    # Delta/Iceberg-style snapshot isolation on plain parquet: every versioned
-    # overwrite writes a NEW directory ``table/v=N`` and then atomically flips a
-    # one-line pointer file. Readers resolve the pointer once and read an
-    # immutable snapshot — a concurrent writer can never make them see a half
-    # table (the non-versioned ``overwrite`` swap protects against torn reads,
-    # but a reader that planned its scan before the swap races file deletion;
-    # versioned snapshots remove that race entirely because old versions are
-    # only removed by an explicit ``vacuum``). The pointer flip is a POSIX
-    # rename — atomic on any local/NFS filesystem; on object stores the pointer
-    # maps to a conditional PUT, same protocol as Delta's _last_checkpoint.
-
-    def _pointer(self, layer: str, table: str) -> Path:
-        return self.root / layer / table / "_LATEST"
-
-    def current_version(self, layer: str, table: str) -> int | None:
-        p = self._pointer(layer, table)
-        if not p.exists():
-            return None
-        return int(p.read_text().strip())
+    # Delta/Iceberg-style snapshot isolation on plain parquet. Every table of a
+    # logical transaction is STAGED as a new immutable ``v=N`` snapshot dir
+    # (invisible to readers), then ONE manifest file mapping table -> version
+    # is written and ONE pointer flips (atomic rename). Readers resolve
+    # versions through the current manifest, so they observe the old set or
+    # the new set, never a mix, and never race file deletion: old versions
+    # are removed only by an explicit ``vacuum``. This is Delta's multi-table
+    # transaction log collapsed to a single-writer lakehouse; on object stores
+    # the pointer maps to a conditional PUT. A crash anywhere before the flip
+    # leaves staged snapshots + an unreferenced manifest file: both invisible,
+    # both vacuumable, and the replayed job re-stages idempotently. It is also
+    # what closes the gap of the facts-then-watermark write order, which is
+    # replay-SAFE but lets a reader between the writes see new facts with the
+    # old watermark.
 
     def versions(self, layer: str, table: str) -> list[int]:
         root = self.root / layer / table
@@ -177,48 +192,17 @@ class Lakehouse:
         ) if root.exists() else []
 
     def _next_version(self, layer: str, table: str) -> int:
-        """Next unused version number: past the pointer AND past any staged or
-        orphaned ``v=N`` dirs (a staged multi-table commit must never collide
-        with a concurrent per-table overwrite's next number)."""
-        cur = self.current_version(layer, table)
-        vs = self.versions(layer, table)
-        return max([cur if cur is not None else -1, *vs, -1]) + 1
+        """Next unused version number: past every ``v=N`` dir, staged or
+        orphaned ones included, so a new snapshot never reuses a number."""
+        return max(self.versions(layer, table), default=-1) + 1
 
-    def overwrite_versioned(self, df: DataFrame, layer: str, table: str) -> int:
-        """Write the next snapshot version and flip the pointer. Returns the new
-        version number. Crash-safe: a crash before the pointer flip leaves an
-        orphan ``v=N`` dir — invisible to readers, and reclaimed only by
-        ``vacuum(drop_staged=True)`` (default vacuum refuses to touch
-        versions above the newest published one, since an in-flight commit
-        looks identical to a crash orphan); the flip itself is an atomic
-        rename."""
-        nxt = self._next_version(layer, table)
-        root = self.root / layer / table
-        df.write.mode("overwrite").parquet(str(root / f"v={nxt}"))
-        atomic_write_text(self._pointer(layer, table), str(nxt))
-        return nxt
-
-    # --- multi-table commit manifest (M3 atomicity, SURVEY §2.6) ----------------------
-    #
-    # The facts-then-watermark write order is replay-SAFE (a crash between the
-    # two writes re-processes an already-written increment, and SCD0/SCD1
-    # idempotency absorbs the replay), but a reader between the writes still
-    # sees new facts with the old watermark. The commit manifest closes that:
-    # every table of a logical transaction is STAGED as a new ``v=N`` snapshot
-    # (per-table pointers untouched — staged versions are invisible), then ONE
-    # manifest file mapping table -> version is written and ONE pointer flips
-    # (atomic rename). Manifest readers resolve versions through the current
-    # manifest, so they observe the old pair or the new pair, never a mix —
-    # the same protocol as Delta's multi-table transaction log collapsed to a
-    # single-writer lakehouse. A crash anywhere before the flip leaves staged
-    # snapshots + an unreferenced manifest file: both invisible, both
-    # vacuumable, and the replayed job re-stages idempotently.
-
-    def _manifest_pointer(self) -> Path:
+    def _manifest_head(self) -> Path:
+        """The pointer file naming the current manifest — the lakehouse's
+        one ``_LATEST``."""
         return self.root / "_commits" / "_LATEST"
 
     def current_manifest_id(self) -> int | None:
-        p = self._manifest_pointer()
+        p = self._manifest_head()
         return int(p.read_text().strip()) if p.exists() else None
 
     def current_manifest(self) -> dict[str, int | list[int]]:
@@ -251,8 +235,8 @@ class Lakehouse:
 
     def stage_version(self, df: DataFrame, layer: str, table: str) -> int:
         """The staging half of a multi-table commit: write the next ``v=N``
-        snapshot WITHOUT flipping the per-table pointer. Invisible to every
-        reader until ``commit_manifest`` references it."""
+        snapshot. Invisible to every reader until ``commit_manifest``
+        references it."""
         nxt = self._next_version(layer, table)
         df.write.mode("overwrite").parquet(str(self.root / layer / table / f"v={nxt}"))
         return nxt
@@ -340,7 +324,7 @@ class Lakehouse:
                 "silently drop its tables (single-writer contract violated); "
                 "re-stage against the new current manifest and re-commit"
             )
-        atomic_write_text(self._manifest_pointer(), str(mid))
+        atomic_write_text(self._manifest_head(), str(mid))
         return mid
 
     def commit_multi(self, writes: Sequence[tuple[DataFrame, str, str]]) -> int:
@@ -464,25 +448,14 @@ class Lakehouse:
         old manifests' pinned versions), then per-table ``vacuum`` every
         table the current manifest knows. Running the two the other way
         round silently reclaims nothing, because per-table vacuum protects
-        every retained manifest's refs. Sweeps the UNION of manifest-known
-        tables and every on-disk table with a ``_LATEST`` pointer — tables
-        published only via ``overwrite_versioned`` (never through a
-        manifest) accumulate history too and must not leak past the policy.
-        Returns ``{"manifests": [...], "versions": {"layer/table": [...]}}``
-        — the audit record a scheduled 100 TB retention job should log."""
+        every retained manifest's refs. Returns
+        ``{"manifests": [...], "versions": {"layer/table": [...]}}`` — the
+        audit record a scheduled 100 TB retention job should log."""
         removed_manifests = self.vacuum_commits(
             keep_last=keep_manifests, orphan_age_s=orphan_age_s
         )
-        tables = set(self.current_manifest())
-        if self.root.exists():
-            for layer_dir in self.root.iterdir():
-                if not layer_dir.is_dir() or layer_dir.name.startswith(("_", ".")):
-                    continue
-                for tdir in layer_dir.iterdir():
-                    if tdir.is_dir() and (tdir / "_LATEST").exists():
-                        tables.add(f"{layer_dir.name}/{tdir.name}")
         removed_versions: dict[str, list[int]] = {}
-        for key in sorted(tables):
+        for key in sorted(self.current_manifest()):
             layer, table = key.split("/", 1)
             rv = self.vacuum(
                 layer, table, keep_last=keep_versions, drop_staged=drop_staged
@@ -503,18 +476,9 @@ class Lakehouse:
         vs = self.as_versions(self.current_manifest().get(f"{layer}/{table}"))
         if not vs:
             return local_frame(spark, [], schema)
-        if len(vs) == 1:
-            return self.read_versioned(spark, layer, table, schema, version=vs[0])
-        paths = []
-        for v in vs:
-            p = self.root / layer / table / f"v={v}"
-            if not p.exists():
-                raise FileNotFoundError(
-                    f"{layer}.{table} version {v} (a committed multi-file "
-                    f"member) not retained; available: {self.versions(layer, table)}"
-                )
-            paths.append(str(p))
-        return spark.read.schema(schema).parquet(*paths)
+        return spark.read.schema(schema).parquet(
+            *(self._version_path(layer, table, v) for v in vs)
+        )
 
     def read_versioned(
         self,
@@ -522,29 +486,30 @@ class Lakehouse:
         layer: str,
         table: str,
         schema: StructType,
-        version: int | None = None,
+        version: int,
     ) -> DataFrame:
-        """Read a snapshot: the pointer's version by default, or any retained
-        historical ``version`` (time travel). Never-written tables read empty."""
-        v = self.current_version(layer, table) if version is None else version
-        if v is None:
-            return local_frame(spark, [], schema)
-        path = self.root / layer / table / f"v={v}"
+        """Read any retained ``v=N`` snapshot (time travel), e.g. one that an
+        older manifest committed. Raises if ``vacuum`` removed it."""
+        return spark.read.schema(schema).parquet(
+            self._version_path(layer, table, version)
+        )
+
+    def _version_path(self, layer: str, table: str, version: int) -> str:
+        path = self.root / layer / table / f"v={version}"
         if not path.exists():
             raise FileNotFoundError(
-                f"{layer}.{table} version {v} not retained (vacuumed?); "
+                f"{layer}.{table} version {version} not retained (vacuumed?); "
                 f"available: {self.versions(layer, table)}"
             )
-        return spark.read.schema(schema).parquet(str(path))
+        return str(path)
 
     def vacuum(
         self, layer: str, table: str, keep_last: int = 2, drop_staged: bool = False
     ) -> list[int]:
         """Drop all but the newest ``keep_last`` PUBLISHED snapshots (never
-        the current pointer target, never a version referenced by ANY
-        retained committed manifest — every manifest ``vacuum_commits`` has
-        kept must stay fully time-travel-readable, not just the current
-        one). Returns removed versions. The retention window is the
+        a version referenced by ANY retained committed manifest — every
+        manifest ``vacuum_commits`` has kept must stay fully
+        time-travel-readable, not just the current one). Returns removed versions. The retention window is the
         time-travel horizon — identical contract to Delta VACUUM; shrink
         the manifest horizon first (``vacuum_commits``) to release old
         manifests' versions.
@@ -555,10 +520,7 @@ class Lakehouse:
         orphan) must neither consume the retention horizon nor be deleted by
         default; pass ``drop_staged=True`` from a context that KNOWS no
         commit is in flight to reclaim crash orphans."""
-        cur = self.current_version(layer, table)
         published_refs = self._manifest_refs(layer, table)
-        if cur is not None:
-            published_refs.add(cur)
         newest_pub = max(published_refs, default=None)
         vs = self.versions(layer, table)
         history = [v for v in vs if newest_pub is not None and v <= newest_pub]
@@ -704,12 +666,12 @@ class Lakehouse:
         Lets the generic upsert path opt into partition pruning without the
         caller re-stating how the table was written.
 
-        A table with a ``_LATEST`` pointer is a *versioned* table whose ``v=N``
+        A table in the current manifest is a *versioned* table whose ``v=N``
         snapshot dirs merely look Hive-partitioned — never report those as a
         partition column (an upsert routed to the pruned path would rewrite
         snapshot dirs as if they were partitions and corrupt the layout)."""
         root = self.root / layer / table
-        if not self.exists(layer, table) or self._pointer(layer, table).exists():
+        if not self.exists(layer, table) or f"{layer}/{table}" in self.current_manifest():
             return None
         for d in root.iterdir():
             if d.is_dir() and "=" in d.name and not d.name.startswith(("_", ".")):
@@ -755,14 +717,14 @@ class Lakehouse:
         staging-swap. Returns the affected partition values ([] = full rewrite)."""
         from airflow_courier_payout_ledger_pipeline_spark.operators.merge import scd1_upsert
 
-        if self._pointer(layer, table).exists():
+        if f"{layer}/{table}" in self.current_manifest():
             # A versioned table: the flat read would union every v=N snapshot
             # (duplicated keys) and the flat overwrite would destroy the
-            # snapshot layout + _LATEST. Refuse loudly; the versioned write
-            # path is overwrite_versioned(scd1_upsert(read_versioned(...))).
+            # snapshot layout. Refuse loudly; the versioned write path is
+            # commit_multi(scd1_upsert(read_committed(...))).
             raise ValueError(
-                f"{layer}.{table} is a versioned table (_LATEST pointer); "
-                "upsert via read_versioned + scd1_upsert + overwrite_versioned, "
+                f"{layer}.{table} is a versioned table (in the commit manifest); "
+                "upsert via read_committed + scd1_upsert + commit_multi, "
                 "not the flat upsert_scd1 path"
             )
         pcol = partition_col or self.detect_partition_col(layer, table)
@@ -818,37 +780,11 @@ class Lakehouse:
             )
             before_touched = touched.count()
             kept = touched.join(keys_df.select(*keys), on=list(keys), how="left_anti")
-            final = Path(self.path(layer, table))
-            tmp = final.with_name(f"{final.name}.__tmp_{uuid.uuid4().hex[:8]}")
             # Touched dir names come from the files Spark READ (not from Python
             # formatting of the collected values) — fully-erased partitions are
             # covered because `touched` still holds the rows being deleted.
             touched_dirs = self._written_partition_dirs(touched, pcol)
-            kept.write.mode("overwrite").partitionBy(pcol).parquet(str(tmp))
-            # Old partitions are stashed OUTSIDE tmp and removed only after every
-            # swap succeeds; on failure the stash is restored, so no point in the
-            # protocol leaves a live partition's only copy in a dir we delete.
-            stash = final.with_name(f"{final.name}.__stash_{uuid.uuid4().hex[:8]}")
-            stash.mkdir()
-            stashed: list[str] = []
-            try:
-                for dname in touched_dirs:
-                    dest = final / dname
-                    if dest.exists():
-                        dest.rename(stash / dname)
-                        stashed.append(dname)
-                    src = tmp / dname
-                    if src.exists():  # partition fully erased → no new dir
-                        src.rename(dest)
-            except BaseException:
-                for dname in stashed:
-                    dest = final / dname
-                    if not dest.exists():
-                        (stash / dname).rename(dest)
-                raise
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(stash, ignore_errors=True)
+            self._swap_partitions(kept, layer, table, pcol, touched_dirs)
             # Honest removed-count: derived from a post-swap read, not from the
             # pre-swap plan — a no-op swap can't report deletions that didn't
             # happen.
@@ -887,9 +823,10 @@ class Lakehouse:
         run) becomes a rewrite of only the affected slices.
 
         Crash-safety: merged data lands in a staging dir first, then affected
-        partition directories are swapped one at a time. A crash mid-swap leaves
-        each partition either old or new — and because SCD1 upsert is idempotent,
-        re-running the merge converges. Returns the affected partition values.
+        partition directories are swapped one at a time (:meth:`_swap_partitions`);
+        an error mid-swap puts the table back in its pre-state, and because SCD1
+        upsert is idempotent, re-running the merge converges. Returns the
+        affected partition values.
 
         Requires every increment row to carry a non-null ``partition_col``; rows
         may NOT move between partitions (standard MERGE-with-pruning contract —
@@ -914,34 +851,57 @@ class Lakehouse:
         else:
             existing = local_frame(spark, [], schema)
         merged = scd1_upsert(existing, increment, list(keys), tiebreaker=tiebreaker)
+        self._swap_partitions(merged, layer, table, partition_col)
+        return parts
 
+    def _swap_partitions(
+        self,
+        df: DataFrame,
+        layer: str,
+        table: str,
+        pcol: str,
+        dnames: Sequence[str] | None = None,
+    ) -> None:
+        """Replace partition dirs of ``layer/table`` with ``df``'s rows: write
+        ``df`` partitioned by ``pcol`` to a staging dir, then swap one
+        ``pcol=<value>`` dir at a time. Each of ``dnames`` (default: every
+        partition ``df`` wrote) takes its staged copy, or is removed when
+        ``df`` wrote none; untouched partitions are never opened.
+
+        Old partitions are stashed OUTSIDE the staging dir and dropped only
+        after every swap succeeded. A failure moves out every partition
+        swapped in so far and restores the stash, so the table reads its
+        pre-state and no cleanup ever deletes a live partition's only copy."""
         final = Path(self.path(layer, table))
         tmp = final.with_name(f"{final.name}.__tmp_{uuid.uuid4().hex[:8]}")
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(str(tmp))
-        # Old partitions are stashed OUTSIDE tmp and dropped only after every
-        # swap succeeds; a failure mid-protocol restores the stash, so the
-        # cleanup rmtree can never hold a live partition's only copy.
         stash = final.with_name(f"{final.name}.__stash_{uuid.uuid4().hex[:8]}")
-        stash.mkdir()
         stashed: list[str] = []
+        placed: list[str] = []
         try:
+            df.write.mode("overwrite").partitionBy(pcol).parquet(str(tmp))
+            if dnames is None:
+                dnames = sorted(p.name for p in tmp.glob(f"{glob.escape(pcol)}=*"))
             final.mkdir(parents=True, exist_ok=True)
-            for pdir in sorted(tmp.glob(f"{partition_col}=*")):
-                dest = final / pdir.name
-                if dest.exists():
-                    dest.rename(stash / pdir.name)
-                    stashed.append(pdir.name)
-                pdir.rename(dest)
-        except BaseException:
-            for dname in stashed:
+            stash.mkdir()
+            for dname in dnames:
                 dest = final / dname
-                if not dest.exists():
-                    (stash / dname).rename(dest)
+                if dest.exists():
+                    dest.rename(stash / dname)
+                    stashed.append(dname)
+                if (tmp / dname).exists():
+                    (tmp / dname).rename(dest)
+                    placed.append(dname)
+        except BaseException:
+            for dname in placed:
+                shutil.rmtree(final / dname)
+            for dname in stashed:
+                (stash / dname).rename(final / dname)
+            if stash.exists():
+                stash.rmdir()  # empty once restored; refuses otherwise
             raise
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(stash, ignore_errors=True)
-        return parts
 
 
 def bucketed_save_as_table(

@@ -95,6 +95,9 @@ def test_multi_table_commit_manifest_crash_window(spark, tmp_path):
         w = [r.cursor for r in lake.read_committed(spark, "dds", "wm", wm_schema).collect()]
         return f, w
 
+    # tables never committed through a manifest read empty
+    assert read_pair() == (0, [])
+
     # transaction 1 commits atomically
     lake.commit_multi([(facts(3), "dds", "fct"), (wm("day1"), "dds", "wm")])
     assert read_pair() == (3, ["day1"])
@@ -122,12 +125,13 @@ def test_multi_table_commit_manifest_crash_window(spark, tmp_path):
     lake.commit_manifest({("dds", "fct"): staged_facts, ("dds", "wm"): staged_wm})
     assert read_pair() == (7, ["day2"])
 
-    # vacuum never drops a manifest-referenced snapshot, and per-table
-    # overwrites skip past staged version numbers (no collision)
+    # vacuum never drops a manifest-referenced snapshot, and a new snapshot
+    # skips past staged-but-unpublished version numbers (no collision)
     lake.vacuum("dds", "fct", keep_last=1)
     assert read_pair()[0] == 7
-    v = lake.overwrite_versioned(facts(1), "dds", "fct")
-    assert v > staged_facts
+    orphan = lake.stage_version(facts(1), "dds", "fct")
+    assert lake.stage_version(facts(2), "dds", "fct") > orphan > staged_facts
+    assert read_pair()[0] == 7
 
 
 def test_commit_manifest_concurrent_committer_fails_loudly(spark, tmp_path, monkeypatch):
@@ -334,6 +338,9 @@ def test_vacuum_keeps_every_retained_manifest_readable(spark, tmp_path):
         m = json.loads((tmp_path / "_commits" / f"m={mid}.json").read_text())
         v = m["dds/t"]
         assert lake.read_versioned(spark, "dds", "t", schema, version=v).collect()[0].x == mid
+    # a vacuumed version errors clearly instead of reading empty
+    with pytest.raises(FileNotFoundError, match="not retained"):
+        lake.read_versioned(spark, "dds", "t", schema, version=0)
     # a crashed commit's manifest FILE (id above the pointer) pins nothing:
     # its staged version is reclaimed by drop_staged exactly as before
     staged = lake.stage_version(df(99), "dds", "t")
@@ -363,9 +370,6 @@ def test_retention_sweep_orders_manifests_before_tables(spark, tmp_path):
                 (spark.createDataFrame([(i * 10,)], schema), "dds", "b"),
             ]
         )
-    # a pointer-only versioned table (never in any manifest) must be swept too
-    for i in range(4):
-        lake.overwrite_versioned(spark.createDataFrame([(i,)], schema), "dds", "p")
     # a crashed commit's orphan manifest (id above the pointer) neither
     # counts toward keep_manifests nor gets deleted (it may be mid-flight)
     orphan_mid = lake.current_manifest_id() + 1
@@ -375,15 +379,9 @@ def test_retention_sweep_orders_manifests_before_tables(spark, tmp_path):
     report = lake.retention_sweep(keep_manifests=2, keep_versions=1)
     assert report["manifests"] == [0, 1, 2]
     assert (tmp_path / "_commits" / f"m={orphan_mid}.json").exists()
-    # keep_versions=1 keeps v=4 (+ v=3 pinned by retained m=3); the
-    # pointer-only table keeps just its newest version
-    assert report["versions"] == {
-        "dds/a": [0, 1, 2],
-        "dds/b": [0, 1, 2],
-        "dds/p": [0, 1, 2],
-    }
+    # keep_versions=1 keeps v=4 (+ v=3 pinned by retained m=3)
+    assert report["versions"] == {"dds/a": [0, 1, 2], "dds/b": [0, 1, 2]}
     assert lake.versions("dds", "a") == [3, 4]
-    assert lake.versions("dds", "p") == [3]
     assert lake.read_committed(spark, "dds", "a", schema).collect()[0].x == 4
     # idempotent: a second sweep finds nothing
     again = lake.retention_sweep(keep_manifests=2, keep_versions=1)

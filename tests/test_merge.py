@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from airflow_courier_payout_ledger_pipeline_spark.operators.merge import (
@@ -140,38 +141,6 @@ def test_write_sorted_orders_rows_within_files(spark, tmp_path):
         assert ks == sorted(ks)  # row-group min/max stats are tight per file
     got = sorted((r.k, r.v) for r in lake.read(spark, "dds", "sorted_t", schema).collect())
     assert len(got) == 100
-
-
-def test_versioned_snapshots_time_travel_and_vacuum(spark, tmp_path):
-    from airflow_courier_payout_ledger_pipeline_spark.sources.lakehouse import Lakehouse
-
-    lake = Lakehouse(str(tmp_path / "lake"))
-    schema = "k bigint, v string"
-    # never-written reads empty; no current version
-    assert lake.current_version("dds", "t") is None
-    assert lake.read_versioned(spark, "dds", "t", schema).count() == 0
-
-    for i in range(4):
-        df = spark.createDataFrame([(j, f"run{i}") for j in range(i + 1)], schema)
-        assert lake.overwrite_versioned(df, "dds", "t") == i
-    assert lake.versions("dds", "t") == [0, 1, 2, 3]
-    assert lake.current_version("dds", "t") == 3
-
-    # latest read sees run3; time travel sees run1 exactly as written
-    assert {r.v for r in lake.read_versioned(spark, "dds", "t", schema).collect()} == {"run3"}
-    old = lake.read_versioned(spark, "dds", "t", schema, version=1)
-    assert old.count() == 2 and {r.v for r in old.collect()} == {"run1"}
-
-    # vacuum retains the newest 2 + the pointer target; old versions error clearly
-    removed = lake.vacuum("dds", "t", keep_last=2)
-    assert removed == [0, 1]
-    assert lake.versions("dds", "t") == [2, 3]
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError, match="not retained"):
-        lake.read_versioned(spark, "dds", "t", schema, version=0)
-    # current read unaffected by vacuum
-    assert lake.read_versioned(spark, "dds", "t", schema).count() == 4
 
 
 def test_generic_upsert_autodetects_partitioning_and_prunes(spark, tmp_path):
@@ -421,9 +390,10 @@ def test_delete_keys_full_partition_erasure_removes_dir(spark, tmp_path):
 
 
 def test_detect_partition_col_ignores_versioned_snapshot_dirs(spark, tmp_path):
-    """A versioned table's v=N snapshot dirs look Hive-partitioned; detection
-    must return None (routing an upsert to the pruned path would corrupt the
-    snapshot layout — especially when the data itself has a column named 'v')."""
+    """A manifest-committed table's v=N snapshot dirs look Hive-partitioned;
+    detection must return None (routing an upsert to the pruned path would
+    corrupt the snapshot layout — especially when the data itself has a
+    column named 'v')."""
     from pyspark.sql.types import StructType
 
     from airflow_courier_payout_ledger_pipeline_spark.sources.lakehouse import Lakehouse
@@ -431,12 +401,10 @@ def test_detect_partition_col_ignores_versioned_snapshot_dirs(spark, tmp_path):
     lake = Lakehouse(str(tmp_path))
     schema = StructType.fromDDL("k string, v string, ts int")
     df = _df(spark, [("a", "x", 1)])
-    lake.overwrite_versioned(df, "dds", "snap")
+    lake.commit_multi([(df, "dds", "snap")])
     assert lake.detect_partition_col("dds", "snap") is None
     # the flat upsert path must REFUSE a versioned table outright (a flat read
     # would union every snapshot; a flat overwrite would destroy the layout)
-    import pytest
-
     inc = _df(spark, [("a", "y", 2)])
     with pytest.raises(ValueError, match="versioned table"):
         lake.upsert_scd1(spark, inc, "dds", "snap", schema, ["k"])
@@ -444,15 +412,70 @@ def test_detect_partition_col_ignores_versioned_snapshot_dirs(spark, tmp_path):
     assert lake.upsert_scd1(spark, inc, "dds", "snap2", schema, ["k"]) == []
     # the versioned-safe upsert shape works and preserves time travel
     merged = spark.createDataFrame([("a", "y", 2)], schema)
-    from airflow_courier_payout_ledger_pipeline_spark.operators.merge import scd1_upsert
-
-    v1 = lake.overwrite_versioned(
-        scd1_upsert(lake.read_versioned(spark, "dds", "snap", schema), merged, ["k"]),
-        "dds", "snap",
+    lake.commit_multi(
+        [(scd1_upsert(lake.read_committed(spark, "dds", "snap", schema), merged, ["k"]),
+          "dds", "snap")]
     )
-    assert v1 == 1 and lake.versions("dds", "snap") == [0, 1]
-    assert {r.v for r in lake.read_versioned(spark, "dds", "snap", schema).collect()} == {"y"}
+    assert lake.versions("dds", "snap") == [0, 1]
+    assert {r.v for r in lake.read_committed(spark, "dds", "snap", schema).collect()} == {"y"}
     assert {r.v for r in lake.read_versioned(spark, "dds", "snap", schema, version=0).collect()} == {"x"}
+
+
+@pytest.mark.parametrize("op", ["merge_upsert_partitioned", "delete_keys"])
+def test_partition_swap_failure_rolls_back_every_partition(spark, tmp_path, op):
+    """The partition swap behind both partition-pruned writers: when the
+    second partition's swap-in fails, the partition already swapped is put
+    back too, so the table reads its pre-state, no staging or stash dir is
+    left, and a rerun converges."""
+    from pathlib import Path
+    from unittest import mock
+
+    from pyspark.sql.types import StructType
+
+    from airflow_courier_payout_ledger_pipeline_spark.sources import lakehouse as L
+
+    lake = L.Lakehouse(str(tmp_path))
+    schema = StructType.fromDDL("k string, v string, month int")
+    lake.overwrite(
+        _df(spark, [("a", "x", 1), ("b", "y", 1), ("c", "z", 2), ("d", "w", 2)],
+            "k string, v string, month int"),
+        "dds", "t", partition_by=["month"],
+    )
+
+    def rows():
+        return sorted(tuple(r) for r in lake.read(spark, "dds", "t", schema).collect())
+
+    pre = rows()
+
+    def run():
+        if op == "merge_upsert_partitioned":
+            inc = _df(spark, [("a", "x2", 1), ("c", "z2", 2)], "k string, v string, month int")
+            lake.merge_upsert_partitioned(spark, inc, "dds", "t", schema, ["k"], "month")
+        else:
+            gone = spark.createDataFrame([("a", 1), ("c", 2)], "k string, month int")
+            lake.delete_keys(spark, "dds", "t", schema, gone, ["k"], partition_col="month")
+
+    real_rename = Path.rename
+
+    def rename(self, target):
+        if self.name == "month=2" and "__tmp_" in self.parent.name:
+            raise RuntimeError("kill")
+        return real_rename(self, target)
+
+    with pytest.raises(RuntimeError, match="kill"), mock.patch.object(
+        L.Path, "rename", autospec=True, side_effect=rename
+    ):
+        run()
+    assert rows() == pre
+    assert not list(tmp_path.glob("dds/*__stash*")) and not list(tmp_path.glob("dds/*__tmp*"))
+
+    run()
+    expected = {
+        "merge_upsert_partitioned": [("a", "x2", 1), ("b", "y", 1), ("c", "z2", 2), ("d", "w", 2)],
+        "delete_keys": [("b", "y", 1), ("d", "w", 2)],
+    }[op]
+    assert rows() == expected
+    assert not list(tmp_path.glob("dds/*__stash*")) and not list(tmp_path.glob("dds/*__tmp*"))
 
 
 def test_delete_keys_null_partition_value(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from datetime import datetime, timezone
 from decimal import Decimal as D
@@ -229,24 +230,19 @@ def test_a_steady_day_reuses_compiled_code(spark, lake, codegen_compiles):
     assert _ledger(spark, lake)[("Bob", 2023, 5)].orders_total_sum == D("1300.00")
 
 
-def test_overwrite_cut_between_its_renames_keeps_the_last_state(spark, tmp_path):
-    """A crash inside ``Lakehouse.overwrite``'s swap, after the table moved
-    to ``__old_*`` and before the staged one took its place, leaves no table
-    directory. The next access rolls the old state back, so dm_couriers never
-    reads empty and the rerun day keeps yesterday's couriers (Bob has no
-    delivery today, so the upsert alone would not bring him back)."""
+def _run_day(spark, lk, ds, deliveries):
+    P.run_daily(spark, lk, fake_api(DAY2_COURIERS), fake_api(deliveries, "delivery_ts"), ds)
 
-    def day(lk, ds, deliveries):
-        P.run_daily(
-            spark, lk, fake_api(DAY2_COURIERS), fake_api(deliveries, "delivery_ts"), ds
-        )
 
-    def couriers(lk):
-        dmc = lk.read(spark, "dds", "dm_couriers", S.DM_COURIERS_SCHEMA)
-        return sorted((r.courier_key, r.courier_name) for r in dmc.collect())
+def _couriers(spark, lk):
+    dmc = lk.read(spark, "dds", "dm_couriers", S.DM_COURIERS_SCHEMA)
+    return sorted((r.courier_key, r.courier_name) for r in dmc.collect())
 
-    crashed = Lakehouse(str(tmp_path / "crashed"))
-    day(crashed, "2023-05-11", DAY1_DELIVERIES)
+
+def _cut_couriers_swap():
+    """Patch that kills ``dm_couriers``'s overwrite between its two renames:
+    after the live table moved to ``__old_*``, before the staged one moved
+    in."""
     real_rename = Path.rename
 
     def rename(self, target):
@@ -254,21 +250,66 @@ def test_overwrite_cut_between_its_renames_keeps_the_last_state(spark, tmp_path)
             raise RuntimeError("kill")
         return real_rename(self, target)
 
-    with pytest.raises(RuntimeError, match="kill"), mock.patch.object(
-        L.Path, "rename", autospec=True, side_effect=rename
-    ):
-        day(crashed, "2023-05-12", DAY2_DELIVERIES)
+    return mock.patch.object(L.Path, "rename", autospec=True, side_effect=rename)
+
+
+def _assert_rerun_matches_clean_lake(spark, crashed, tmp_path):
+    _run_day(spark, crashed, "2023-05-12", DAY2_DELIVERIES)
+    clean = Lakehouse(str(tmp_path / "clean"))
+    _run_day(spark, clean, "2023-05-11", DAY1_DELIVERIES)
+    _run_day(spark, clean, "2023-05-12", DAY2_DELIVERIES)
+    assert _couriers(spark, crashed) == _couriers(spark, clean)
+    assert _ledger(spark, crashed) == _ledger(spark, clean)
+
+
+def test_overwrite_cut_between_its_renames_keeps_the_last_state(spark, tmp_path):
+    """A crash inside ``Lakehouse.overwrite``'s swap, after the table moved
+    to ``__old_*`` and before the staged one took its place, leaves no table
+    directory. The next access rolls the old state back, so dm_couriers never
+    reads empty and the rerun day keeps yesterday's couriers (Bob has no
+    delivery today, so the upsert alone would not bring him back)."""
+    crashed = Lakehouse(str(tmp_path / "crashed"))
+    _run_day(spark, crashed, "2023-05-11", DAY1_DELIVERIES)
+    with pytest.raises(RuntimeError, match="kill"), _cut_couriers_swap():
+        _run_day(spark, crashed, "2023-05-12", DAY2_DELIVERIES)
     dds = tmp_path / "crashed" / "dds"
     assert not (dds / "dm_couriers").exists()
-    assert couriers(crashed) == [("c1", "Alice Cooper"), ("c2", "Bob")]
+    assert _couriers(spark, crashed) == [("c1", "Alice Cooper"), ("c2", "Bob")]
     assert not list(dds.glob("dm_couriers.__old_*"))
+    _assert_rerun_matches_clean_lake(spark, crashed, tmp_path)
 
-    day(crashed, "2023-05-12", DAY2_DELIVERIES)
-    clean = Lakehouse(str(tmp_path / "clean"))
-    day(clean, "2023-05-11", DAY1_DELIVERIES)
-    day(clean, "2023-05-12", DAY2_DELIVERIES)
-    assert couriers(crashed) == couriers(clean)
-    assert _ledger(spark, crashed) == _ledger(spark, clean)
+
+def test_cut_overwrite_beside_a_stale_old_dir_keeps_the_last_state(spark, tmp_path):
+    """A crash after ``overwrite``'s second rename (here: in its removal of
+    the old state) leaves a stale ``dm_couriers.__old_*`` beside the live
+    table. A later swap cut between its renames must still roll back to the
+    last state: were the stale dir kept, two ``__old_*`` dirs would sit
+    there, neither could be told to be the last state, and dm_couriers would
+    read 0 rows."""
+    crashed = Lakehouse(str(tmp_path / "crashed"))
+    _run_day(spark, crashed, "2023-05-11", DAY1_DELIVERIES)
+    real_rmtree = shutil.rmtree
+
+    def rmtree(path, *args, **kwargs):
+        if Path(path).name.startswith("dm_couriers.__old_"):
+            raise RuntimeError("kill")
+        return real_rmtree(path, *args, **kwargs)
+
+    with pytest.raises(RuntimeError, match="kill"), mock.patch.object(
+        L.shutil, "rmtree", side_effect=rmtree
+    ):
+        _run_day(spark, crashed, "2023-05-12", DAY2_DELIVERIES)
+    dds = tmp_path / "crashed" / "dds"
+    assert len(list(dds.glob("dm_couriers.__old_*"))) == 1
+    last = _couriers(spark, crashed)
+    assert last == [("c1", "Alice Cooper"), ("c2", "Bob")]
+
+    with pytest.raises(RuntimeError, match="kill"), _cut_couriers_swap():
+        _run_day(spark, crashed, "2023-05-12", DAY2_DELIVERIES)
+    assert not (dds / "dm_couriers").exists()
+    assert _couriers(spark, crashed) == last
+    assert not list(dds.glob("dm_couriers.__old_*"))
+    _assert_rerun_matches_clean_lake(spark, crashed, tmp_path)
 
 
 def test_missing_order_dim_drops_fact(spark, lake, monkeypatch):

@@ -249,6 +249,12 @@ _FILE_EVIDENCE: dict[str, set[str]] = {
         "incremental_mart_maintenance",
         "ann_index_persisted_search",
     },
+    # the mart module docstring now says the mart is overwritten, not
+    # SCD1-upserted (no code change); the mart queries cover the module
+    "airflow_courier_payout_ledger_pipeline_spark/plans/ledger.py": {
+        "courier_ledger",
+        "incremental_mart_maintenance",
+    },
     # records_to_bronze builds a local relation; no registry query extracts
     # through it (tests/test_pipeline.py pins its rows and plan), so the REST
     # module's distributed path and the promotion rail adjudicate
